@@ -7,9 +7,18 @@ Maps the reference's PSQLTask verb set (lib/bricolage/psqldatasource.rb
   ``{warehouse}/{schema}/{name}`` registered as temp view
   ``schema__name`` (and plain ``name`` for the default schema);
 - multi-statement transactionality (psqldatasource.rb:386-390) becomes a
-  **stage-and-swap writer**: write to ``<table>.__stage__``, then an
-  atomic directory rename into place — readers never see partial data,
-  a crash leaves the old table intact;
+  **stage-and-swap writer**: write to ``<table>.__stage__``, rename the
+  live directory to ``<table>.__old__``, then rename the stage into
+  place — readers never see partial data. A crash before the first
+  rename leaves the old table intact; a crash between the two renames
+  leaves no table at the live path (the old copy survives as
+  ``__old__``, which nothing rolls back yet);
+- every table read goes through one path that reuses the schema this
+  engine last read or wrote for the directory while the directory's
+  ``(st_ino, st_mtime_ns)`` stamp is unchanged, so a read after the
+  engine's own write runs no Parquet footer-inference job. Any change to
+  the directory — a swap, an appended file, a write by another engine —
+  changes the stamp, and the next read infers again;
 - ``truncate`` / ``drop`` / ``rename_table`` / ``analyze`` / ``vacuum``
   (compaction) keep their reference semantics.
 """
@@ -25,8 +34,16 @@ import uuid
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bricolage_spark.exception import JobFailure, ParameterError
+
+
+def _stamp(path: str) -> tuple[int, int]:
+    """A directory's identity and last change: a swap (new inode) or any
+    file added, removed or renamed in it (new mtime) changes it."""
+    st = os.stat(path)
+    return st.st_ino, st.st_mtime_ns
 
 
 def split_statements(sql_text: str) -> list[str]:
@@ -109,6 +126,9 @@ class SparkEngine:
         # executed (observed during the write itself) — how job classes
         # report inserted-row counts without a post-write table scan
         self.last_insert_rows: int | None = None
+        # table dir -> ((st_ino, st_mtime_ns), schema) as of this engine's
+        # last read or write of it; see ``_read``
+        self._schemas: dict[str, tuple[tuple[int, int], StructType]] = {}
         os.makedirs(warehouse, exist_ok=True)
 
     # -- paths / catalog ----------------------------------------------------
@@ -120,10 +140,13 @@ class SparkEngine:
     def table_exists(self, spec: TableSpec | str) -> bool:
         return os.path.isdir(self.table_dir(spec))
 
-    def register(self, spec: TableSpec | str) -> None:
+    def register(self, spec: TableSpec | str, schema: StructType | None = None) -> None:
+        """(Re-)register the table's temp view. ``schema`` is the schema
+        the caller knows the directory's files to have (a writer's own
+        frame schema); without it the engine's remembered or inferred
+        schema is used."""
         spec = TableSpec.parse(spec) if isinstance(spec, str) else spec
-        df = self.spark.read.parquet(self.table_dir(spec))
-        df.createOrReplaceTempView(spec.view_name)
+        self._read(self.table_dir(spec), schema).createOrReplaceTempView(spec.view_name)
 
     def register_all(self) -> list[str]:
         names = []
@@ -147,7 +170,34 @@ class SparkEngine:
     def table(self, spec: TableSpec | str) -> DataFrame:
         if not self.table_exists(spec):
             raise JobFailure(f"table not found: {spec}")
-        return self.spark.read.parquet(self.table_dir(spec))
+        return self._read(self.table_dir(spec))
+
+    def known_schema(self, spec: TableSpec | str) -> StructType | None:
+        """The schema this engine last read or wrote for the table, if
+        its directory has not changed since; else None. Runs no Spark
+        work."""
+        path = self.table_dir(spec)
+        hit = self._schemas.get(path)
+        if hit is None or not os.path.isdir(path) or hit[0] != _stamp(path):
+            return None
+        return hit[1]
+
+    def _read(self, path: str, schema: StructType | None = None) -> DataFrame:
+        """The one Parquet read path behind ``table`` and ``register``.
+
+        Without ``schema``, a schema remembered under the directory's
+        current stamp is reused; otherwise Spark infers it from a footer
+        (one Spark job). The schema Spark resolves is remembered under
+        the stamp taken before the read, so a change racing the read
+        leaves a stale stamp that the next read re-infers past."""
+        stamp = _stamp(path)
+        if schema is None:
+            hit = self._schemas.get(path)
+            schema = hit[1] if hit is not None and hit[0] == stamp else None
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        df = reader.parquet(path)
+        self._schemas[path] = (stamp, df.schema)
+        return df
 
     # -- SQL ---------------------------------------------------------------
 
@@ -213,7 +263,12 @@ class SparkEngine:
         writer = df.write
         if partition_by:
             writer = writer.partitionBy(*partition_by)
+        # the schema the written directory is known to have: the frame's
+        # own for a plain overwrite (partitioning moves the partition
+        # columns and types them by inference), the remembered one for
+        # an append of exactly that schema; anything else is inferred
         if mode == "overwrite":
+            known = None if partition_by else df.schema
             stage = f"{final}.__stage__{uuid.uuid4().hex[:8]}"
             writer.mode("overwrite").parquet(stage)
             old = f"{final}.__old__{uuid.uuid4().hex[:8]}"
@@ -222,10 +277,12 @@ class SparkEngine:
             os.rename(stage, final)
             shutil.rmtree(old, ignore_errors=True)
         elif mode == "append":
+            prior = self.known_schema(spec)
             writer.mode("append").parquet(final)
+            known = prior if prior == df.schema else None
         else:
             raise ParameterError(f"unknown write mode: {mode}")
-        self.register(spec)
+        self.register(spec, known)
         return int(obs.get["rows_written"])
 
     # -- task verbs (psqldatasource.rb §2.2) --------------------------------
@@ -237,6 +294,7 @@ class SparkEngine:
                 return
             raise JobFailure(f"cannot drop, no such table: {spec}")
         shutil.rmtree(self.table_dir(spec))
+        self._schemas.pop(self.table_dir(spec), None)
         self.spark.catalog.dropTempView(spec.view_name)
 
     def truncate(self, spec: TableSpec | str) -> None:
@@ -252,12 +310,14 @@ class SparkEngine:
         if self.table_exists(dest):
             raise JobFailure(f"cannot rename, table exists: {dest}")
         os.makedirs(os.path.dirname(self.table_dir(dest)), exist_ok=True)
+        known = self.known_schema(src)
         os.rename(self.table_dir(src), self.table_dir(dest))
+        self._schemas.pop(self.table_dir(src), None)
         try:
             self.spark.catalog.dropTempView(src.view_name)
         except Exception:
             pass
-        self.register(dest)
+        self.register(dest, known)
 
     def create_view(self, name: TableSpec | str, select_sql: str) -> None:
         spec = TableSpec.parse(name) if isinstance(name, str) else name
@@ -422,7 +482,8 @@ class SparkEngine:
         lose the co-location and re-shuffle the whole table on every
         probe join. The fix is an idempotent
         ``CREATE TABLE ... CLUSTERED BY ... LOCATION`` over the existing
-        files (schema recovered from the parquet footers) — after which
+        files (schema from ``_read``: remembered, else the parquet
+        footers) — after which
         scans report ``Bucketed: true`` and joins on the bucket key
         leave the table side Exchange-free.
 
@@ -487,7 +548,7 @@ class SparkEngine:
         if not self.spark.catalog.tableExists(name):
             if not os.path.isdir(location):
                 raise JobFailure(f"no such bucketed table: {spec}")
-            schema = self.spark.read.parquet(location).schema
+            schema = self._read(location).schema
             cols = ", ".join(
                 f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
             )
@@ -601,6 +662,7 @@ class SparkEngine:
                 os.rename(location, old)
             os.rename(stage_loc, location)
             shutil.rmtree(old, ignore_errors=True)
+            self._read(location, df.schema)  # remember the written schema
             self.bucketed_table(spec, bucket_cols, n_buckets, sort_cols)
         else:
             raise ParameterError(f"unknown write mode: {mode}")

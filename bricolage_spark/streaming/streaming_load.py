@@ -6,8 +6,9 @@ Semantics reproduced from jobclass/streaming_load.rb (531 LoC — SURVEY.md
 1. list candidate files under ``queue-path`` whose basename matches the
    strftime-like ``file-name`` pattern (``%Y%m%d-%H%M_%Q`` → named-group
    regex, compile_name_pattern :455-473);
-2. dedup against the **load log** table by ``data_file``
-   (right-outer/NOT-IN joins :294-330) — exactly-once across crash/retry;
+2. dedup against the **load log** table by ``data_file`` (the
+   reference's right-outer/NOT-IN joins :294-330; here one pushed-down
+   ``data_file IN (...)`` probe) — exactly-once across crash/retry;
 3. load new files into the work table, ``INSERT INTO dest SELECT * FROM
    work`` (or a custom SQL), and append the load log — atomically (the
    reference uses one Redshift transaction :166-195; we stage both the
@@ -27,8 +28,10 @@ import os
 import re
 import shutil
 import uuid
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from bricolage_spark.engine import TableSpec, split_statements
 from bricolage_spark.exception import ParameterError
@@ -36,7 +39,13 @@ from bricolage_spark.jobs import Job, JobResult, jobclass
 
 _PATTERN_TOKEN = re.compile(r"[^%]+|%\d*.")
 
-_LOG_COLUMNS = ("job_process_id", "start_time", "end_time", "target_table", "data_file")
+_LOG_SCHEMA = StructType([
+    StructField("job_process_id", StringType()),
+    StructField("start_time", TimestampType()),
+    StructField("end_time", TimestampType()),
+    StructField("target_table", StringType()),
+    StructField("data_file", StringType()),
+])
 
 
 def compile_name_pattern(template: str) -> re.Pattern:
@@ -189,30 +198,22 @@ class StreamingLoader:
         self.sql = sql
         self.process_id = process_id
 
-    def loaded_files(self) -> set[str]:
-        if not self.engine.table_exists(self.log_table):
-            return set()
-        return {
-            r.data_file
-            for r in self.engine.table(self.log_table).select("data_file").collect()
-        }
-        # NOTE: at 100 TB the log has millions of rows — production path
-        # below (new_files) uses an anti-join, never this collect; this
-        # helper exists for tests/inspection only.
-
     def new_files(self, candidates: list[str]) -> list[str]:
-        """Anti-join candidates against the load log (exactly-once core,
-        streaming_load.rb:294-312). Distributed: both sides are frames."""
-        if not candidates:
-            return []
-        spark = self.engine.spark
-        cand = spark.createDataFrame(
-            [(os.path.basename(p), p) for p in candidates], "data_file string, path string"
+        """The candidates the load log does not name yet, in candidate
+        order (exactly-once core, streaming_load.rb:294-312). One
+        ``data_file IN (<candidate basenames>)`` probe, pushed down to
+        the log's Parquet scan, so the driver holds O(candidates) names
+        however long the log grows."""
+        if not candidates or not self.engine.table_exists(self.log_table):
+            return list(candidates)
+        names = [os.path.basename(p) for p in candidates]
+        probe = (
+            self.engine.table(self.log_table)
+            .select("data_file")
+            .where(F.col("data_file").isin(names))
         )
-        if self.engine.table_exists(self.log_table):
-            log = self.engine.table(self.log_table).select("data_file")
-            cand = cand.join(log, "data_file", "left_anti")
-        return [r.path for r in cand.select("path").collect()]
+        loaded = {r.data_file for r in probe.collect()}
+        return [p for p, name in zip(candidates, names) if name not in loaded]
 
     # -- joint dest+log commit (streaming_load.rb:166-195 parity) -----------
     #
@@ -220,8 +221,9 @@ class StreamingLoader:
     # transaction. Two independent parquet appends can't be joint-atomic,
     # so the commit protocol is write-ahead-manifest:
     #
-    #   1. stage the dest delta and the log delta into hidden sibling
-    #      dirs (``<table>.__delta__<txid>``) — invisible to readers;
+    #   1. stage the dest delta (a Spark write) and the log delta (one
+    #      Parquet file written on the driver) into hidden sibling dirs
+    #      (``<table>.__delta__<txid>``) — invisible to readers;
     #   2. COMMIT POINT: atomically rename a manifest JSON into
     #      ``<warehouse>/.streaming_load_tx/`` naming both staged dirs;
     #   3. move the staged part-files into the live table dirs;
@@ -246,6 +248,33 @@ class StreamingLoader:
         df.write.mode("overwrite").parquet(stage)
         return stage, int(obs.get["rows_written"])
 
+    def _stage_log_delta(self, files: list[str], txid: str) -> str:
+        """Write the batch's load-log rows into the log's hidden staging
+        dir as one Parquet file, on the driver: the rows are only file
+        names, cheaper to write with pyarrow than with a Spark job. Same
+        five columns and types as a Spark-written log part. Returns the
+        stage dir."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        stage = self.engine.table_dir(self.log_table) + f".__delta__{txid}"
+        os.makedirs(stage, exist_ok=True)
+        now = datetime.now(timezone.utc)
+        n = len(files)
+        rows = pa.table(
+            {
+                "job_process_id": [self.process_id] * n,
+                "start_time": [now] * n,
+                "end_time": [now] * n,
+                "target_table": [self.dest_table] * n,
+                "data_file": [os.path.basename(p) for p in files],
+            },
+            schema=to_arrow_schema(_LOG_SCHEMA),
+        )
+        pq.write_table(rows, os.path.join(stage, f"part-00000-{txid}.parquet"))
+        return stage
+
     def _apply_moves(self, moves: list[dict]) -> None:
         for mv in moves:
             src, dest = mv["src"], mv["dest"]
@@ -257,13 +286,20 @@ class StreamingLoader:
                     os.rename(os.path.join(src, f), os.path.join(dest, f))
                 shutil.rmtree(src, ignore_errors=True)
             if os.path.isdir(dest):
-                self.engine.register(mv["table"])
+                schema = mv.get("schema")
+                self.engine.register(
+                    mv["table"], StructType.fromJson(schema) if schema else None
+                )
 
     def recover(self) -> int:
         """Roll forward any committed-but-unapplied manifests, then drop
         pre-commit staging garbage. Idempotent; call before each batch.
-        (Single concurrent loader per dest table, as in the reference —
-        the job-level lock serializes invocations.)"""
+
+        No lock is taken: the loader assumes one invocation per
+        destination at a time (the reference's single loader per dest
+        table). Two concurrent invocations can load a file twice, and one
+        invocation's recover() can sweep the other's in-flight staging
+        dirs."""
         applied = 0
         if os.path.isdir(self._tx_dir):
             for mf in sorted(os.listdir(self._tx_dir)):
@@ -362,28 +398,24 @@ class StreamingLoader:
 
         txid = uuid.uuid4().hex[:12]
         dest_stage, rows = self._stage_delta(insert_df, self.dest_table, txid)
-        now = F.current_timestamp()
-        log_rows = (
-            spark.createDataFrame(
-                [(os.path.basename(p),) for p in new], "data_file string"
-            )
-            .select(
-                F.lit(self.process_id).alias("job_process_id"),
-                now.alias("start_time"),
-                now.alias("end_time"),
-                F.lit(self.dest_table).alias("target_table"),
-                F.col("data_file"),
-            )
-        )
-        log_stage, _ = self._stage_delta(log_rows, self.log_table, txid)
+        log_stage = self._stage_log_delta(new, txid)
+        # the dest's schema after the append: the delta's own when the
+        # delta is the whole table or matches what the table already
+        # holds; otherwise the dest is inferred when it is registered
+        dest_schema = insert_df.schema
+        if self.engine.table_exists(self.dest_table) and (
+            self.engine.known_schema(self.dest_table) != dest_schema
+        ):
+            dest_schema = None
 
         manifest = {
             "txid": txid,
             "moves": [
                 {"src": dest_stage, "dest": self.engine.table_dir(self.dest_table),
-                 "table": self.dest_table},
+                 "table": self.dest_table,
+                 "schema": dest_schema.jsonValue() if dest_schema else None},
                 {"src": log_stage, "dest": self.engine.table_dir(self.log_table),
-                 "table": self.log_table},
+                 "table": self.log_table, "schema": _LOG_SCHEMA.jsonValue()},
             ],
         }
         os.makedirs(self._tx_dir, exist_ok=True)
@@ -433,11 +465,12 @@ def streaming_load(job: Job) -> JobResult:
         files = queue.queued_files()
         return JobResult(message=f"noop: {len(files)} queued file(s)")
     if job.bool_param("dequeue-only"):
+        queued = queue.queued_files()
+        # the same bounded log probe a load runs: O(queue), not O(log)
+        unloaded = set(loader.new_files(queued))
         moved = 0
-        # one scan of the load log, not one per queued file
-        loaded = loader.loaded_files()
-        for p in queue.queued_files():
-            if os.path.basename(p) in loaded:
+        for p in queued:
+            if p not in unloaded:
                 queue.dequeue(p)
                 moved += 1
         return JobResult(message=f"dequeued {moved} file(s)")

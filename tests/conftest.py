@@ -33,6 +33,21 @@ def half_up(x, nd=4):
     return float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
 
 
+def spark_jobs(spark, fn) -> int:
+    """Run ``fn()`` under a fresh Spark job group and return how many
+    Spark jobs it started (from the status tracker, not from timing)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

@@ -64,6 +64,62 @@ def test_rename_table(engine, spark):
         engine.rename_table("a", "c")
 
 
+def test_schema_reuse_misses_after_another_engine_overwrites(engine, spark):
+    """The remembered schema is keyed on the directory's stamp: a second
+    engine's overwrite with other columns and types swaps the directory,
+    so the first engine's table() and register() infer the new schema."""
+    from bricolage_spark.engine import SparkEngine
+
+    engine.save_table(df_of(spark, [(1,)], "id int"), "t")
+    assert engine.table("t").dtypes == [("id", "int")]
+    other = SparkEngine(spark, engine.warehouse)
+    other.save_table(df_of(spark, [("a", "b")], "id string, v string"), "t")
+    assert engine.table("t").dtypes == [("id", "string"), ("v", "string")]
+    spark.catalog.dropTempView("t")
+    engine.register("t")
+    assert spark.table("t").dtypes == [("id", "string"), ("v", "string")]
+    assert [tuple(r) for r in spark.table("t").collect()] == [("a", "b")]
+
+
+def test_partitioned_write_still_infers_partition_types(engine, spark):
+    """Partitioning moves the partition column last and types it from
+    the directory names, so the frame's schema is not the table's."""
+    df = df_of(spark, [(1, "7"), (2, "8")], "id int, p string")
+    engine.save_table(df, "pt", partition_by=["p"])
+    inferred = spark.read.parquet(engine.table_dir("pt")).schema
+    assert engine.table("pt").schema == inferred
+    assert engine.table("pt").dtypes == [("id", "int"), ("p", "int")]
+    assert spark.table("pt").dtypes == [("id", "int"), ("p", "int")]
+
+
+def test_append_reuses_only_an_equal_schema(engine, spark):
+    """An append of the remembered schema runs only its write job; one
+    whose frame schema differs falls back to inference (one more job)."""
+    from conftest import spark_jobs
+
+    engine.save_table(df_of(spark, [(1,)], "id int"), "t")
+    same = df_of(spark, [(2,)], "id int")
+    n_same = spark_jobs(spark, lambda: engine.save_table(same, "t", mode="append"))
+    wider = df_of(spark, [(3, "x")], "id int, v string")
+    n_wider = spark_jobs(spark, lambda: engine.save_table(wider, "t", mode="append"))
+    assert n_wider == n_same + 1
+    assert engine.table("t").schema == spark.read.parquet(engine.table_dir("t")).schema
+    assert engine.table("t").count() == 3
+
+
+def test_drop_and_rename_leave_no_stale_schema(engine, spark):
+    engine.save_table(df_of(spark, [(1,)], "id int"), "a")
+    engine.rename_table("a", "b")
+    assert engine.table_dir("a") not in engine._schemas
+    assert engine.known_schema("b") == engine.table("b").schema
+    engine.drop_table("b")
+    assert engine.table_dir("b") not in engine._schemas
+    assert engine.known_schema("b") is None
+    # a table written at the old path by someone else reads as written
+    df_of(spark, [("z",)], "s string").write.parquet(engine.table_dir("b"))
+    assert engine.table("b").dtypes == [("s", "string")]
+
+
 def test_drop_force_semantics(engine):
     engine.drop_table("nope", force=True)  # no error
     with pytest.raises(JobFailure, match="cannot drop"):

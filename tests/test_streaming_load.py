@@ -364,3 +364,128 @@ def test_custom_sql_does_not_force_dest_schema_on_raw_files(
     assert stats["rows"] == 2
     out = {r.user: r.total for r in engine.table("agg_dest").collect()}
     assert out == {1: 4.0, 2: 4.0}
+
+
+def test_crash_after_both_deltas_staged_reloads_once(engine, tmp_path, queue_dir):
+    """Kill after the dest delta and the driver-written log delta are both
+    staged, before the manifest rename: nothing is published, the staging
+    is swept, and the retry loads the batch exactly once."""
+    write_files(queue_dir, {"20240101_0000_00.json": ['{"x": 1, "y": "a"}']})
+    loader = make_loader(engine, queue_dir, tmp_path)
+    orig = loader._stage_log_delta
+
+    def stage_then_crash(files, txid):
+        orig(files, txid)
+        raise RuntimeError("killed before the commit point")
+
+    loader._stage_log_delta = stage_then_crash
+    with pytest.raises(RuntimeError):
+        loader.run_once()
+    loader._stage_log_delta = orig
+    parent = os.path.dirname(engine.table_dir("load_test"))
+    assert len([d for d in os.listdir(parent) if ".__delta__" in d]) == 2
+    assert not engine.table_exists("load_test")
+    assert not engine.table_exists("load_test_l")
+    assert not os.path.isdir(loader._tx_dir) or os.listdir(loader._tx_dir) == []
+
+    stats = loader.run_once()
+    assert stats["loaded_files"] == 1
+    assert engine.table("load_test").count() == 1
+    assert [r.data_file for r in engine.table("load_test_l").collect()] == [
+        "20240101_0000_00.json"
+    ]
+    assert not [d for d in os.listdir(parent) if ".__delta__" in d]
+    assert os.listdir(loader._tx_dir) == []
+
+
+LOG_DTYPES = [
+    ("job_process_id", "string"),
+    ("start_time", "timestamp"),
+    ("end_time", "timestamp"),
+    ("target_table", "string"),
+    ("data_file", "string"),
+]
+
+
+def test_driver_written_log_reads_back_with_spark_types(engine, spark, tmp_path, queue_dir):
+    """The load log keeps its five Spark types whether the driver-written
+    delta starts the log or is appended to parts Spark wrote; a fresh
+    engine (schema inference) and a merged-schema read agree."""
+    import datetime
+
+    from bricolage_spark.engine import SparkEngine
+
+    spark_part = spark.createDataFrame(
+        [("old", datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 1),
+          "load_test", "20231231_0000_00.json")],
+        ", ".join(f"{c} {t}" for c, t in LOG_DTYPES),
+    )
+    for log_table, seeded in (("fresh_l", False), ("seeded_l", True)):
+        if seeded:
+            engine.save_table(spark_part, log_table)
+        name = f"2024010{2 if seeded else 1}_0000_00.json"
+        write_files(queue_dir, {name: ['{"x": 1, "y": "a"}']})
+        loader = make_loader(engine, queue_dir, tmp_path, process_id="p1")
+        loader.log_table = log_table
+        loader.run_once()
+        path = engine.table_dir(log_table)
+        ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+        before = spark.conf.get(ntz)
+        spark.conf.set(ntz, "true")  # plain Spark's default
+        try:
+            merged = spark.read.option("mergeSchema", "true").parquet(path)
+        finally:
+            spark.conf.set(ntz, before)
+        for df in (
+            engine.table(log_table),
+            SparkEngine(spark, engine.warehouse).table(log_table),
+            merged,
+        ):
+            assert df.dtypes == LOG_DTYPES
+            rows = {r.data_file: r for r in df.collect()}
+            assert set(rows) == ({name, "20231231_0000_00.json"} if seeded else {name})
+            row = rows[name]
+            assert (row.job_process_id, row.target_table) == ("p1", "load_test")
+            assert row.start_time is not None and row.start_time == row.end_time
+
+
+def test_dequeue_only_moves_just_the_logged_files(engine, tmp_path, queue_dir):
+    """dequeue-only probes the log for the queued files only and moves
+    those already loaded; an unloaded file stays queued."""
+    write_files(queue_dir, {"20240101_0000_00.json": ['{"x": 1, "y": "a"}']})
+    make_loader(engine, queue_dir, tmp_path).run_once(load_only=True)
+    write_files(queue_dir, {"20240101_0100_00.json": ['{"x": 2, "y": "b"}']})
+    home = tmp_path / "home"
+    (home / "subsys").mkdir(parents=True)
+    job_path = home / "subsys" / "deq.job"
+    job_path.write_text(
+        "class: streaming_load\n"
+        "dest-table: load_test\n"
+        f"queue-path: {queue_dir}\n"
+        f"persistent-path: {tmp_path}/archive/%Y/%m/%d\n"
+        "file-name: '%Y%m%d_%H%M_%Q.json'\n"
+        "dequeue-only: true\n"
+    )
+    r = Context(engine, home=str(home)).load_job(str(job_path)).execute()
+    assert r.message == "dequeued 1 file(s)"
+    assert sorted(os.listdir(queue_dir)) == ["20240101_0100_00.json"]
+    assert (tmp_path / "archive" / "2024" / "01" / "01" / "20240101_0000_00.json").exists()
+
+
+def test_warm_batch_spark_job_budget(engine, spark, tmp_path, queue_dir):
+    """A warm batch's fixed cost, counted in Spark jobs: the log probe,
+    the work-table write and the dest delta write. Re-reading a table's
+    schema, or building the log delta as a Spark frame, would add jobs."""
+    from conftest import spark_jobs
+
+    loader = make_loader(engine, queue_dir, tmp_path)
+    write_files(queue_dir, {"20240101_0000_00.json": ['{"x": 1, "y": "a"}']})
+    loader.run_once()  # cold: creates dest, log and work table
+    write_files(queue_dir, {
+        "20240101_0100_00.json": ['{"x": 2, "y": "b"}'],
+        "20240101_0200_00.json": ['{"x": 3, "y": "c"}'],
+    })
+    stats = {}
+    n = spark_jobs(spark, lambda: stats.update(loader.run_once()))
+    assert stats["loaded_files"] == 2 and stats["rows"] == 2
+    assert n <= 4, f"a warm batch ran {n} Spark jobs"
