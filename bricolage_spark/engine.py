@@ -6,13 +6,12 @@ Maps the reference's PSQLTask verb set (lib/bricolage/psqldatasource.rb
 - a *table* ``[schema.]name`` is a Parquet directory
   ``{warehouse}/{schema}/{name}`` registered as temp view
   ``schema__name`` (and plain ``name`` for the default schema);
-- multi-statement transactionality (psqldatasource.rb:386-390) becomes a
-  **stage-and-swap writer**: write to ``<table>.__stage__``, rename the
-  live directory to ``<table>.__old__``, then rename the stage into
-  place — readers never see partial data. A crash before the first
-  rename leaves the old table intact; a crash between the two renames
-  leaves no table at the live path (the old copy survives as
-  ``__old__``, which nothing rolls back yet);
+- multi-statement transactionality (psqldatasource.rb:386-390) becomes
+  ``publish``, the one code path that changes a table directory: stage
+  in a hidden sibling (``<table>.__stage__<id>``), rename a manifest
+  into ``.streaming_load_tx/`` (the commit point), apply, remove it —
+  under per-table writer locks. Opening the engine rolls committed
+  manifests forward and sweeps uncommitted siblings;
 - every table read goes through one path that reuses the schema this
   engine last read or wrote for the directory while the directory's
   ``(st_ino, st_mtime_ns)`` stamp is unchanged, so a read after the
@@ -29,7 +28,9 @@ import json
 import os
 import re
 import shutil
+import threading
 import uuid
+from contextlib import ExitStack, contextmanager, suppress
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +38,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bricolage_spark.exception import JobFailure, ParameterError
+from bricolage_spark.locks import DEFAULT_TIMEOUT, LockTimeout, serialized
+
+# a table's uncommitted siblings: stages (the loader's are ``__delta__``)
+# and trash; and the table locks each thread holds
+_ARTIFACT = re.compile(r"\.__(stage|delta|old)__")
+_held = threading.local()
 
 
 def _stamp(path: str) -> tuple[int, int]:
@@ -129,7 +136,9 @@ class SparkEngine:
         # table dir -> ((st_ino, st_mtime_ns), schema) as of this engine's
         # last read or write of it; see ``_read``
         self._schemas: dict[str, tuple[tuple[int, int], StructType]] = {}
-        os.makedirs(warehouse, exist_ok=True)
+        self._tx_dir = os.path.join(warehouse, ".streaming_load_tx")
+        os.makedirs(self._tx_dir, exist_ok=True)
+        self.recover()
 
     # -- paths / catalog ----------------------------------------------------
 
@@ -148,23 +157,21 @@ class SparkEngine:
         spec = TableSpec.parse(spec) if isinstance(spec, str) else spec
         self._read(self.table_dir(spec), schema).createOrReplaceTempView(spec.view_name)
 
+    def _entries(self):  # (schema, name) of every schema dir entry
+        for schema in sorted(os.listdir(self.warehouse)):
+            sdir = os.path.join(self.warehouse, schema)
+            if not schema.startswith(".") and os.path.isdir(sdir):
+                yield from ((schema, name) for name in sorted(os.listdir(sdir)))
+
     def register_all(self) -> list[str]:
         names = []
-        for schema in sorted(os.listdir(self.warehouse)) if os.path.isdir(self.warehouse) else []:
-            sdir = os.path.join(self.warehouse, schema)
-            if not os.path.isdir(sdir):
-                continue
-            for name in sorted(os.listdir(sdir)):
-                # skip engine-internal sibling dirs: <t>.__bucketed__ data
-                # dirs and any stale <t>.__stage__/<t>.__old__ left by a
-                # crash — dotted names are not valid temp-view names and
-                # none of these are user tables.
-                if "." in name:
-                    continue
-                if os.path.isdir(os.path.join(sdir, name)):
-                    spec = TableSpec(schema, name)
-                    self.register(spec)
-                    names.append(str(spec))
+        for schema, name in self._entries():
+            # skip engine-internal siblings (<t>.__bucketed__ data,
+            # <t>.__retired__ twins, another process's in-flight stage):
+            # dotted names are not valid temp-view names
+            if "." not in name and os.path.isdir(os.path.join(self.warehouse, schema, name)):
+                self.register(TableSpec(schema, name))
+                names.append(str(TableSpec(schema, name)))
         return names
 
     def table(self, spec: TableSpec | str) -> DataFrame:
@@ -221,15 +228,7 @@ class SparkEngine:
         return re.sub(r"\b\w+\.\w+\b", sub, statement) if known else statement
 
     def _known_schema_tables(self) -> list[str]:
-        out = []
-        if not os.path.isdir(self.warehouse):
-            return out
-        for schema in os.listdir(self.warehouse):
-            sdir = os.path.join(self.warehouse, schema)
-            if schema == "default" or not os.path.isdir(sdir):
-                continue
-            out.extend(f"{schema}.{t}" for t in os.listdir(sdir) if "." not in t)
-        return out
+        return [f"{s}.{t}" for s, t in self._entries() if s != "default" and "." not in t]
 
     # -- transactional write protocol --------------------------------------
 
@@ -241,11 +240,11 @@ class SparkEngine:
         sort_by: list[str] | None = None,
         partition_by: list[str] | None = None,
     ) -> int:
-        """Stage-and-swap write (the reference's transaction emulation).
+        """Staged write (the reference's transaction emulation): write
+        to a stage dir under the table's writer lock, then ``publish``
+        it — overwrite replaces the live dir, append merges the stage's
+        files into it.
 
-        overwrite: write to a stage dir, atomically rename into place.
-        append: write a new parquet sub-part into the live dir (parquet
-        readers list files, a completed part-file set is self-consistent).
         Returns the row count written, observed for free during the write
         job itself (``df.observe``) — no post-write re-scan of the table
         (at 100 TB an extra count() per insert/rebuild is a full-table
@@ -254,8 +253,9 @@ class SparkEngine:
         from pyspark.sql import Observation
 
         spec = TableSpec.parse(dest) if isinstance(dest, str) else dest
+        if mode not in ("overwrite", "append"):
+            raise ParameterError(f"unknown write mode: {mode}")
         final = self.table_dir(spec)
-        os.makedirs(os.path.dirname(final), exist_ok=True)
         if sort_by:
             df = df.sortWithinPartitions(*sort_by)
         obs = Observation()
@@ -263,27 +263,115 @@ class SparkEngine:
         writer = df.write
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        # the schema the written directory is known to have: the frame's
-        # own for a plain overwrite (partitioning moves the partition
-        # columns and types them by inference), the remembered one for
-        # an append of exactly that schema; anything else is inferred
-        if mode == "overwrite":
-            known = None if partition_by else df.schema
+        with self.locked(spec):
+            prior = self.known_schema(spec)
             stage = f"{final}.__stage__{uuid.uuid4().hex[:8]}"
             writer.mode("overwrite").parquet(stage)
-            old = f"{final}.__old__{uuid.uuid4().hex[:8]}"
-            if os.path.exists(final):
-                os.rename(final, old)
-            os.rename(stage, final)
-            shutil.rmtree(old, ignore_errors=True)
-        elif mode == "append":
-            prior = self.known_schema(spec)
-            writer.mode("append").parquet(final)
-            known = prior if prior == df.schema else None
-        else:
-            raise ParameterError(f"unknown write mode: {mode}")
-        self.register(spec, known)
+            self.publish([("replace" if mode == "overwrite" else "merge", stage, final)])
+            # the schema the written directory is known to have: the
+            # frame's own for a plain overwrite (partitioning moves the
+            # partition columns and types them by inference), the
+            # remembered one for an append of exactly that schema;
+            # anything else is inferred
+            if mode == "overwrite":
+                known = None if partition_by else df.schema
+            else:
+                known = prior if prior == df.schema else None
+            self.register(spec, known)
         return int(obs.get["rows_written"])
+
+    def locked(self, *tables: TableSpec | str):
+        """Hold the writer lock of every named table."""
+        return self._locked([self.table_dir(t) for t in tables])
+
+    @contextmanager
+    def _locked(self, paths, timeout: float = DEFAULT_TIMEOUT):
+        """``locks.serialized`` on ``.locks/<schema>.<table>`` for each
+        table ``paths`` belong to, in sorted order; re-entrant per thread."""
+        held = _held.__dict__.setdefault("locks", set())
+        with ExitStack() as stack:
+            for lock in sorted(map(self._lock_path, filter(None, paths))):
+                if lock not in held:
+                    os.makedirs(os.path.dirname(lock), exist_ok=True)
+                    stack.enter_context(serialized(lock, timeout, poll=0.05))
+                    held.add(lock)
+                    stack.callback(held.discard, lock)
+            yield
+
+    def _lock_path(self, path: str) -> str:
+        schema, name = os.path.relpath(path, self.warehouse).split(os.sep)[:2]
+        return os.path.join(self.warehouse, ".locks", f"{schema}.{name.split('.')[0]}")
+
+    def publish(self, moves: list[tuple[str, str | None, str]]) -> None:
+        """Apply ``moves`` all or nothing, under the locks of every table
+        touched: the one way the engine changes a table directory.
+        ``("replace", src, dest)`` renames ``src`` over ``dest`` (None
+        drops it); ``("merge", src, dest)`` moves ``src``'s files in."""
+        with self._locked([p for m in moves for p in m[1:]]):
+            manifest = {"txid": uuid.uuid4().hex[:12], "moves": [list(m) for m in moves]}
+            path = os.path.join(self._tx_dir, f"{manifest['txid']}.json")
+            self._write_manifest(path, manifest)  # the commit point
+            self._apply_moves(path, manifest)
+
+    def _write_manifest(self, path: str, manifest: dict) -> None:
+        # the temporary copy is a stage sibling: recovery sweeps it
+        tmp = f"{manifest['moves'][0][2]}.__stage__{manifest['txid']}.json"
+        os.makedirs(os.path.dirname(tmp), exist_ok=True)
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, path)
+
+    def _apply_moves(self, path: str, manifest: dict) -> None:
+        """Apply a committed manifest from its recorded progress on, then
+        remove it. Every step is idempotent on replay; the progress count
+        keeps a replay from redoing a move a later one built on."""
+        moves = manifest["moves"]
+        for i in range(manifest.get("done", 0), len(moves)):
+            kind, src, dest = moves[i]
+            trash = f"{dest}.__old__{manifest['txid']}"
+            if kind == "merge":  # a partitioned append lands in col=val/ dirs
+                for root, dirs, files in os.walk(src):
+                    dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                    out = os.path.normpath(os.path.join(dest, os.path.relpath(root, src)))
+                    os.makedirs(out, exist_ok=True)
+                    for f in files:
+                        if not f.startswith(("_", ".")):  # not _SUCCESS, .crc
+                            os.rename(os.path.join(root, f), os.path.join(out, f))
+                trash = src  # the emptied stage
+            elif src is None or os.path.exists(src):
+                if os.path.exists(dest):
+                    os.rename(dest, trash)
+                if src is not None:
+                    os.makedirs(os.path.dirname(dest), exist_ok=True)
+                    os.rename(src, dest)
+            shutil.rmtree(trash, ignore_errors=True)
+            if i + 1 < len(moves):
+                self._write_manifest(path, {**manifest, "done": i + 1})
+        os.remove(path)
+
+    def _manifests(self):  # (path, manifest, the paths its moves touch)
+        for name in sorted(os.listdir(self._tx_dir)):
+            with suppress(FileNotFoundError), open(os.path.join(self._tx_dir, name)) as f:
+                manifest = json.load(f)
+                yield f.name, manifest, [p for m in manifest["moves"] for p in m[1:]]
+
+    def recover(self) -> None:
+        """Roll committed manifests forward, then sweep uncommitted
+        siblings, each under its tables' locks (skipping tables a live
+        process holds). Runs when the engine opens."""
+        for path, manifest, paths in self._manifests():
+            with suppress(LockTimeout), self._locked(paths, 0):
+                if os.path.exists(path):
+                    self._apply_moves(path, manifest)
+        for p in [os.path.join(self.warehouse, *e) for e in self._entries() if _ARTIFACT.search(e[1])]:
+            with suppress(LockTimeout), self._locked([p], 0):
+                owned = {self._lock_path(x) for *_, paths in self._manifests() for x in paths if x}
+                if self._lock_path(p) in owned:
+                    continue  # a publish committed since the pass above
+                if os.path.isdir(p):
+                    shutil.rmtree(p)
+                else:
+                    os.remove(p)
 
     # -- task verbs (psqldatasource.rb §2.2) --------------------------------
 
@@ -293,7 +381,7 @@ class SparkEngine:
             if force:
                 return
             raise JobFailure(f"cannot drop, no such table: {spec}")
-        shutil.rmtree(self.table_dir(spec))
+        self.publish([("replace", None, self.table_dir(spec))])
         self._schemas.pop(self.table_dir(spec), None)
         self.spark.catalog.dropTempView(spec.view_name)
 
@@ -305,19 +393,16 @@ class SparkEngine:
     def rename_table(self, src: TableSpec | str, dest: TableSpec | str) -> None:
         src = TableSpec.parse(src) if isinstance(src, str) else src
         dest = TableSpec.parse(dest) if isinstance(dest, str) else dest
-        if not self.table_exists(src):
-            raise JobFailure(f"cannot rename, no such table: {src}")
-        if self.table_exists(dest):
-            raise JobFailure(f"cannot rename, table exists: {dest}")
-        os.makedirs(os.path.dirname(self.table_dir(dest)), exist_ok=True)
-        known = self.known_schema(src)
-        os.rename(self.table_dir(src), self.table_dir(dest))
-        self._schemas.pop(self.table_dir(src), None)
-        try:
+        with self.locked(src, dest):
+            if not self.table_exists(src):
+                raise JobFailure(f"cannot rename, no such table: {src}")
+            if self.table_exists(dest):
+                raise JobFailure(f"cannot rename, table exists: {dest}")
+            known = self.known_schema(src)
+            self.publish([("replace", self.table_dir(src), self.table_dir(dest))])
+            self._schemas.pop(self.table_dir(src), None)
             self.spark.catalog.dropTempView(src.view_name)
-        except Exception:
-            pass
-        self.register(dest, known)
+            self.register(dest, known)
 
     def create_view(self, name: TableSpec | str, select_sql: str) -> None:
         spec = TableSpec.parse(name) if isinstance(name, str) else name
@@ -339,17 +424,18 @@ class SparkEngine:
         Target partition count comes from the file listing (driver-side
         metadata), not ``df.rdd.getNumPartitions()`` — converting the
         plan to an RDD just to count splits forces an extra analysis pass.
+        The writer lock, held from read to publish, keeps appends out.
         """
-        df = self.table(spec)
-        tdir = self.table_dir(spec)
-        n_files = sum(
-            1
-            for _root, _dirs, files in os.walk(tdir)
-            for f in files
-            if f.endswith(".parquet")
-        )
-        n = target_partitions or max(1, n_files // 4)
-        self.save_table(df.repartition(n), spec, mode="overwrite")
+        with self.locked(spec):
+            df = self.table(spec)
+            n_files = sum(
+                1
+                for _root, _dirs, files in os.walk(self.table_dir(spec))
+                for f in files
+                if f.endswith(".parquet")
+            )
+            n = target_partitions or max(1, n_files // 4)
+            self.save_table(df.repartition(n), spec, mode="overwrite")
 
     def bucketed_dir(self, spec: TableSpec | str) -> str:
         """Location of a bucketed table's files (engine-owned sibling of
@@ -585,11 +671,10 @@ class SparkEngine:
         — the O(batch) maintenance write a corpus-scale registry needs;
         an overwrite there would rewrite O(history) per snapshot.
 
-        Overwrite is stage-and-swap (write a staging table, then move
-        the files into place and re-register), so a plan that READS the
-        table being overwritten — registry compaction — consumes the
-        old files while the new ones are written, same contract as
-        ``save_table``.
+        Overwrite writes a staging table, then ``publish``es it into
+        place and re-registers, so a plan that READS the table being
+        overwritten — registry compaction — consumes the old files
+        while the new ones are written, same contract as ``save_table``.
         """
         from pyspark.sql import Observation
 
@@ -602,70 +687,61 @@ class SparkEngine:
         # data placement stays ours (and a dropped metastore entry never
         # orphans a directory in the global spark-warehouse)
         location = self.bucketed_dir(spec)
-        if mode == "append":
-            # make sure THIS session's catalog knows the table (files may
-            # predate the session), then let Spark validate the spec
-            self.bucketed_table(spec, bucket_cols, n_buckets, sort_cols)
-            (
-                df.write.format("parquet")
-                .mode("append")
-                .option("path", location)
-                .bucketBy(n_buckets, *bucket_cols)
-                .sortBy(*(sort_cols or bucket_cols))
-                .saveAsTable(name)
-            )
-            self._write_bucket_spec(location, bucket_cols, n_buckets, sort_cols)
-        elif mode == "overwrite":
-            if self.spark.catalog.tableExists(name):
-                # same managed-table guard as bucketed_table (checked
-                # BEFORE the stage write so a refusal costs nothing):
-                # the engine's own entries are always EXTERNAL (written
-                # with an explicit path), so a MANAGED entry is a
-                # foreign table whose DATA the swap's drop would delete
-                rows = self.spark.sql(f"DESCRIBE FORMATTED {name}").collect()
-                cat_type = next(
-                    (r.data_type for r in rows if r.col_name == "Type"), ""
+        with self.locked(spec):
+            if mode == "append":
+                # Spark's own append: make sure THIS session's catalog knows
+                # the table (files may predate it); Spark validates the spec
+                self.bucketed_table(spec, bucket_cols, n_buckets, sort_cols)
+                (
+                    df.write.format("parquet")
+                    .mode("append")
+                    .option("path", location)
+                    .bucketBy(n_buckets, *bucket_cols)
+                    .sortBy(*(sort_cols or bucket_cols))
+                    .saveAsTable(name)
                 )
-                if cat_type.strip().upper() == "MANAGED":
-                    raise JobFailure(
-                        f"catalog name collision: {name} is a MANAGED "
-                        "table — overwriting it would delete its data. "
-                        "Rename the engine table or drop the managed "
-                        "table explicitly."
+                self._write_bucket_spec(location, bucket_cols, n_buckets, sort_cols)
+            elif mode == "overwrite":
+                # same managed-table guard as bucketed_table (checked
+                # BEFORE the stage write so a refusal costs nothing): the
+                # engine's own entries are always EXTERNAL, so a MANAGED
+                # entry is a foreign table whose DATA the publish would drop
+                if self.spark.catalog.tableExists(name):
+                    rows = self.spark.sql(f"DESCRIBE FORMATTED {name}").collect()
+                    cat_type = next(
+                        (r.data_type for r in rows if r.col_name == "Type"), ""
                     )
-            stage_name = f"{name}__stage"
-            stage_loc = f"{location}.__stage__{uuid.uuid4().hex[:8]}"
-            self.spark.sql(f"DROP TABLE IF EXISTS {stage_name}")
-            (
-                df.write.format("parquet")
-                .mode("overwrite")
-                .option("path", stage_loc)
-                .bucketBy(n_buckets, *bucket_cols)
-                .sortBy(*(sort_cols or bucket_cols))
-                .saveAsTable(stage_name)
-            )
-            # the stage write has fully executed (and consumed any reads
-            # of the old files) — stamp the bucketing contract INTO the
-            # staging dir BEFORE the swap, so the sidecar travels
-            # atomically with the files it describes: a crash between
-            # the rename and a post-rename stamp would leave a
-            # sidecar-less bucketed dir, and the part-filename fallback
-            # can only disprove UNDER-claimed counts — an over-claimed
-            # re-registration after such a crash would silently elide
-            # Exchanges over a false layout, the exact bug the sidecar
-            # exists to prevent.
-            self._write_bucket_spec(stage_loc, bucket_cols, n_buckets, sort_cols)
-            self.spark.sql(f"DROP TABLE IF EXISTS {stage_name}")
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            old = f"{location}.__old__{uuid.uuid4().hex[:8]}"
-            if os.path.exists(location):
-                os.rename(location, old)
-            os.rename(stage_loc, location)
-            shutil.rmtree(old, ignore_errors=True)
-            self._read(location, df.schema)  # remember the written schema
-            self.bucketed_table(spec, bucket_cols, n_buckets, sort_cols)
-        else:
-            raise ParameterError(f"unknown write mode: {mode}")
+                    if cat_type.strip().upper() == "MANAGED":
+                        raise JobFailure(
+                            f"catalog name collision: {name} is a MANAGED "
+                            "table — overwriting it would delete its data. "
+                            "Rename the engine table or drop the managed "
+                            "table explicitly."
+                        )
+                stage_name = f"{name}__stage"
+                stage_loc = f"{location}.__stage__{uuid.uuid4().hex[:8]}"
+                self.spark.sql(f"DROP TABLE IF EXISTS {stage_name}")
+                (
+                    df.write.format("parquet")
+                    .mode("overwrite")
+                    .option("path", stage_loc)
+                    .bucketBy(n_buckets, *bucket_cols)
+                    .sortBy(*(sort_cols or bucket_cols))
+                    .saveAsTable(stage_name)
+                )
+                # stamp the bucketing contract INTO the stage before the
+                # publish, so the sidecar travels atomically with its files:
+                # a sidecar-less dir after a crash could be re-registered
+                # with an over-claimed count, which the part-filename
+                # fallback cannot disprove
+                self._write_bucket_spec(stage_loc, bucket_cols, n_buckets, sort_cols)
+                self.spark.sql(f"DROP TABLE IF EXISTS {stage_name}")
+                self.spark.sql(f"DROP TABLE IF EXISTS {name}")
+                self.publish([("replace", stage_loc, location)])
+                self._read(location, df.schema)  # remember the written schema
+                self.bucketed_table(spec, bucket_cols, n_buckets, sort_cols)
+            else:
+                raise ParameterError(f"unknown write mode: {mode}")
         return int(obs.get["rows_written"])
 
     def create_dummy_table(self, spec: TableSpec | str) -> None:

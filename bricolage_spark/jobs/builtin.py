@@ -175,10 +175,10 @@ def insert_delta(job: Job) -> JobResult:
     """jobclass/insert-delta.rb:1-31 — idempotent partition upsert.
 
     DELETE FROM dest WHERE delete-cond; INSERT…SELECT — atomically:
-    old-minus-cond ∪ new-rows staged and swapped in one rename, so a
-    crash mid-job never leaves a half-deleted table (the reference gets
-    this from a Redshift transaction; we get it from the writer
-    protocol).
+    old-minus-cond ∪ new-rows staged and published as one overwrite;
+    after a crash the next engine open leaves dest whole (old or new,
+    never missing), so a re-run keeps every row outside delete-cond
+    (the reference gets this from a Redshift transaction).
     """
     dest = job.require("dest-table")
     cond = job.require("delete-cond")
@@ -215,24 +215,30 @@ def rebuild_drop(job: Job) -> JobResult:
 def rebuild_rename(job: Job) -> JobResult:
     """jobclass/rebuild-rename.rb:1-53 — zero-downtime rebuild.
 
-    Build ``<dest>_wk``, then swap: dest → ``<dest>_old`` (previous _old
-    dropped), ``<dest>_wk`` → dest. The reference regex-rewrites
-    ``$dest_table`` to the work table (rebuild-rename.rb:32-35); here the
-    SQL builds a DataFrame so no rewrite is needed — the staged write IS
-    the work table.
+    Build ``<dest>_wk``, then one publish: dest → ``<dest>_old``
+    (previous _old dropped), ``<dest>_wk`` → dest — a crash leaves a
+    dest. The reference regex-rewrites ``$dest_table`` to the work table
+    (rebuild-rename.rb:32-35); here the SQL builds a DataFrame so no
+    rewrite is needed — the staged write IS the work table.
     """
-    dest = job.require("dest-table")
+    engine, dest = job.engine, job.require("dest-table")
     spec = TableSpec.parse(dest)
     wk = TableSpec(spec.schema, spec.name + "_wk")
     old = TableSpec(spec.schema, spec.name + "_old")
-    df = job.engine.execute_script(job.read_sql_param())
+    df = engine.execute_script(job.read_sql_param())
     if df is None:
         raise ParameterError("rebuild SQL must end with a SELECT")
-    n = job.engine.save_table(df, wk, mode="overwrite")
-    job.engine.drop_table(old, force=True)
-    if job.engine.table_exists(spec):
-        job.engine.rename_table(spec, old)
-    job.engine.rename_table(wk, spec)
+    with engine.locked(spec, wk, old):
+        n = engine.save_table(df, wk, mode="overwrite")
+        schemas = engine.known_schema(spec), engine.known_schema(wk)
+        live = engine.table_dir(spec) if engine.table_exists(spec) else None
+        engine.publish([("replace", live, engine.table_dir(old)),
+                        ("replace", engine.table_dir(wk), engine.table_dir(spec))])
+        for t, schema in ((wk, None), (old, schemas[0]), (spec, schemas[1])):
+            if engine.table_exists(t):
+                engine.register(t, schema)
+            else:
+                engine.drop_view(t)
     _post_ops(job, str(spec))
     return JobResult(message=f"rebuilt {dest} via rename (old kept)", rows=n)
 

@@ -16,7 +16,6 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from bricolage_spark.engine import TableSpec
 from bricolage_spark.exception import JobFailure, ParameterError
 from bricolage_spark.jobs import Job, JobResult, jobclass
 from bricolage_spark.parameters import ParamSchema, StringParam, TableParam
@@ -330,10 +329,8 @@ def registry_compact(job: Job) -> JobResult:
                 # never-delete)
                 pdir = job.engine.table_dir(dest)
                 retired = f"{pdir}.__retired__{uuid.uuid4().hex[:8]}"
-                os.rename(pdir, retired)
-                job.engine.spark.catalog.dropTempView(
-                    TableSpec.parse(str(dest)).view_name
-                )
+                job.engine.publish([("replace", pdir, retired)])
+                job.engine.drop_view(dest)
                 retired_note = (
                     f"; plain twin at {pdir} holds "
                     + (

@@ -1,12 +1,8 @@
-"""Host-global serialization lock (vacuumlock.rb:184-285 parity).
-
-Redshift allows one concurrent VACUUM per cluster, so the reference
-serializes vacuums behind a host-global lock file with a timeout
-(default 3600 s, ``BRICOLAGE_VACUUM_LOCK``). Spark compaction has no such
-hard limit, but serializing heavy rewrites is still operationally useful
-(I/O contention), so the utility is kept with the same contract:
-create-exclusive lock file, poll with timeout, stale-lock detection via
-the writing pid.
+"""Create-exclusive lock files (vacuumlock.rb:184-285 parity): the
+engine's per-table writer lock (``SparkEngine.locked``). Same contract as
+the reference's host-global vacuum lock: create-exclusive lock file, poll
+with timeout (default 3600 s), stale-lock detection via the writing pid;
+a released lock leaves no file behind.
 """
 
 from __future__ import annotations

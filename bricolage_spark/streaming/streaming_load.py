@@ -11,9 +11,9 @@ Semantics reproduced from jobclass/streaming_load.rb (531 LoC — SURVEY.md
    ``data_file IN (...)`` probe) — exactly-once across crash/retry;
 3. load new files into the work table, ``INSERT INTO dest SELECT * FROM
    work`` (or a custom SQL), and append the load log — atomically (the
-   reference uses one Redshift transaction :166-195; we stage both the
-   dest append and the log append behind the stage-and-swap writer and
-   only move files after both commit);
+   reference uses one Redshift transaction :166-195; we stage both
+   appends and merge them with one ``SparkEngine.publish``, under the
+   tables' writer locks, so concurrent loaders load each file once);
 4. dequeue: move each loaded file to ``persistent-path`` (date-templated
    from the file name's captured fields, format_path :429-449).
 
@@ -23,7 +23,6 @@ operational modes.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
@@ -218,26 +217,8 @@ class StreamingLoader:
     # -- joint dest+log commit (streaming_load.rb:166-195 parity) -----------
     #
     # The reference appends dest AND the load log in ONE Redshift
-    # transaction. Two independent parquet appends can't be joint-atomic,
-    # so the commit protocol is write-ahead-manifest:
-    #
-    #   1. stage the dest delta (a Spark write) and the log delta (one
-    #      Parquet file written on the driver) into hidden sibling dirs
-    #      (``<table>.__delta__<txid>``) — invisible to readers;
-    #   2. COMMIT POINT: atomically rename a manifest JSON into
-    #      ``<warehouse>/.streaming_load_tx/`` naming both staged dirs;
-    #   3. move the staged part-files into the live table dirs;
-    #   4. delete the manifest.
-    #
-    # A crash before (2) leaves only invisible garbage (cleaned by
-    # recover(); the batch reloads — nothing was published). A crash
-    # after (2) is rolled FORWARD by recover() on the next invocation:
-    # both appends complete together, so dest and log can never disagree
-    # and the anti-join stays exactly-once.
-
-    @property
-    def _tx_dir(self) -> str:
-        return os.path.join(self.engine.warehouse, ".streaming_load_tx")
+    # transaction; here ONE ``SparkEngine.publish`` merges both staged
+    # deltas, with the batch, probe to dequeue, under the tables' locks.
 
     def _stage_delta(self, df: DataFrame, table: str, txid: str) -> tuple[str, int]:
         """Write ``df`` as parquet into a hidden staging dir; returns
@@ -275,53 +256,9 @@ class StreamingLoader:
         pq.write_table(rows, os.path.join(stage, f"part-00000-{txid}.parquet"))
         return stage
 
-    def _apply_moves(self, moves: list[dict]) -> None:
-        for mv in moves:
-            src, dest = mv["src"], mv["dest"]
-            if os.path.isdir(src):
-                os.makedirs(dest, exist_ok=True)
-                for f in os.listdir(src):
-                    if f.startswith(("_", ".")):
-                        continue  # _SUCCESS / .crc markers stay behind
-                    os.rename(os.path.join(src, f), os.path.join(dest, f))
-                shutil.rmtree(src, ignore_errors=True)
-            if os.path.isdir(dest):
-                schema = mv.get("schema")
-                self.engine.register(
-                    mv["table"], StructType.fromJson(schema) if schema else None
-                )
-
-    def recover(self) -> int:
-        """Roll forward any committed-but-unapplied manifests, then drop
-        pre-commit staging garbage. Idempotent; call before each batch.
-
-        No lock is taken: the loader assumes one invocation per
-        destination at a time (the reference's single loader per dest
-        table). Two concurrent invocations can load a file twice, and one
-        invocation's recover() can sweep the other's in-flight staging
-        dirs."""
-        applied = 0
-        if os.path.isdir(self._tx_dir):
-            for mf in sorted(os.listdir(self._tx_dir)):
-                if not mf.endswith(".json"):
-                    continue
-                path = os.path.join(self._tx_dir, mf)
-                with open(path) as f:
-                    manifest = json.load(f)
-                self._apply_moves(manifest["moves"])
-                os.remove(path)
-                applied += 1
-        # staging dirs with no manifest = crash before the commit point
-        for table in (self.dest_table, self.log_table):
-            tdir = self.engine.table_dir(table)
-            parent = os.path.dirname(tdir)
-            base = os.path.basename(tdir)
-            if not os.path.isdir(parent):
-                continue
-            for name in os.listdir(parent):
-                if name.startswith(base + ".__delta__"):
-                    shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
-        return applied
+    def recover(self) -> None:
+        """``SparkEngine.recover``, run by ``run_once`` under its locks."""
+        self.engine.recover()
 
     def _select_df(self) -> DataFrame:
         """Resolve the custom SQL body to the SELECT that produces the
@@ -357,87 +294,74 @@ class StreamingLoader:
 
     def run_once(self, load_only: bool = False) -> dict:
         """One micro-batch. Returns counters."""
-        self.recover()
-        candidates = self.queue.queued_files()
-        new = self.new_files(candidates)
-        skipped = len(candidates) - len(new)
-        if not new:
-            return {"loaded_files": 0, "skipped_files": skipped, "rows": 0}
+        with self.engine.locked(*filter(None, (self.dest_table, self.log_table, self.work_table))):
+            self.recover()
+            candidates = self.queue.queued_files()
+            new = self.new_files(candidates)
+            skipped = len(candidates) - len(new)
+            if not new:
+                return {"loaded_files": 0, "skipped_files": skipped, "rows": 0}
 
-        spark = self.engine.spark
-        reader = spark.read
-        # Schema hint for the RAW files. With a custom SQL the dest
-        # schema describes the TRANSFORMED rows, not the files — forcing
-        # it onto the reader would parse every mismatched field as NULL
-        # and silently commit garbage (exactly-once then prevents the
-        # re-load). The work table's (.ct-defined) schema is the raw
-        # shape in that case; without a custom SQL the dest schema is.
-        schema_src = None
-        if self.sql:
-            if self.work_table and self.engine.table_exists(self.work_table):
-                schema_src = self.engine.table(self.work_table).schema
-        elif self.engine.table_exists(self.dest_table):
-            schema_src = self.engine.table(self.dest_table).schema
-        if schema_src is not None:
-            reader = reader.schema(schema_src)
-        # DataFrameReader.parquet is varargs-only; csv/json accept a list
-        # (their second positional is schema — never splat those)
-        df: DataFrame = (
-            reader.parquet(*new) if self.fmt == "parquet" else getattr(reader, self.fmt)(new)
-        )
+            spark = self.engine.spark
+            reader = spark.read
+            # Schema hint for the RAW files. With a custom SQL the dest
+            # schema describes the TRANSFORMED rows, not the files — forcing
+            # it onto the reader would parse every mismatched field as NULL
+            # and silently commit garbage (exactly-once then prevents the
+            # re-load). The work table's (.ct-defined) schema is the raw
+            # shape in that case; without a custom SQL the dest schema is.
+            schema_src = None
+            if self.sql:
+                if self.work_table and self.engine.table_exists(self.work_table):
+                    schema_src = self.engine.table(self.work_table).schema
+            elif self.engine.table_exists(self.dest_table):
+                schema_src = self.engine.table(self.dest_table).schema
+            if schema_src is not None:
+                reader = reader.schema(schema_src)
+            # DataFrameReader.parquet is varargs-only; csv/json accept a list
+            # (their second positional is schema — never splat those)
+            df: DataFrame = (
+                reader.parquet(*new) if self.fmt == "parquet" else getattr(reader, self.fmt)(new)
+            )
 
-        # work table (skip-work mode loads straight into dest)
-        if self.work_table:
-            self.engine.save_table(df, self.work_table, mode="overwrite")
-            work_df = self.engine.table(self.work_table)
-            insert_df = self._select_df() if self.sql else work_df
-        elif self.sql:
-            insert_df = self._select_df()
-        else:
-            insert_df = df
+            # work table (skip-work mode loads straight into dest)
+            if self.work_table:
+                self.engine.save_table(df, self.work_table, mode="overwrite")
+                work_df = self.engine.table(self.work_table)
+                insert_df = self._select_df() if self.sql else work_df
+            elif self.sql:
+                insert_df = self._select_df()
+            else:
+                insert_df = df
 
-        txid = uuid.uuid4().hex[:12]
-        dest_stage, rows = self._stage_delta(insert_df, self.dest_table, txid)
-        log_stage = self._stage_log_delta(new, txid)
-        # the dest's schema after the append: the delta's own when the
-        # delta is the whole table or matches what the table already
-        # holds; otherwise the dest is inferred when it is registered
-        dest_schema = insert_df.schema
-        if self.engine.table_exists(self.dest_table) and (
-            self.engine.known_schema(self.dest_table) != dest_schema
-        ):
-            dest_schema = None
+            txid = uuid.uuid4().hex[:12]
+            dest_stage, rows = self._stage_delta(insert_df, self.dest_table, txid)
+            log_stage = self._stage_log_delta(new, txid)
+            # the dest's schema after the append: the delta's own when the
+            # delta is the whole table or matches what the table already
+            # holds; otherwise the dest is inferred when it is registered
+            dest_schema = insert_df.schema
+            if self.engine.table_exists(self.dest_table) and (
+                self.engine.known_schema(self.dest_table) != dest_schema
+            ):
+                dest_schema = None
 
-        manifest = {
-            "txid": txid,
-            "moves": [
-                {"src": dest_stage, "dest": self.engine.table_dir(self.dest_table),
-                 "table": self.dest_table,
-                 "schema": dest_schema.jsonValue() if dest_schema else None},
-                {"src": log_stage, "dest": self.engine.table_dir(self.log_table),
-                 "table": self.log_table, "schema": _LOG_SCHEMA.jsonValue()},
-            ],
-        }
-        os.makedirs(self._tx_dir, exist_ok=True)
-        mpath = os.path.join(self._tx_dir, f"{txid}.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.rename(tmp, mpath)  # ← the commit point
-        self._apply_moves(manifest["moves"])
-        os.remove(mpath)
+            self.engine.publish([("merge", dest_stage, self.engine.table_dir(self.dest_table)),
+                                 ("merge", log_stage, self.engine.table_dir(self.log_table))])
+            self.engine.register(self.dest_table, dest_schema)
+            self.engine.register(self.log_table, _LOG_SCHEMA)
 
-        moved = 0
-        if not load_only:
-            for p in new:
-                self.queue.dequeue(p)
-                moved += 1
-        return {
-            "loaded_files": len(new),
-            "skipped_files": skipped,
-            "rows": rows,
-            "dequeued": moved,
-        }
+            moved = 0
+            if not load_only:
+                for p in new:
+                    self.queue.dequeue(p)
+                    moved += 1
+            return {
+                "loaded_files": len(new),
+                "skipped_files": skipped,
+                "rows": rows,
+                "dequeued": moved,
+            }
 
 
 @jobclass("streaming_load")

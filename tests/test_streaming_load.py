@@ -204,17 +204,20 @@ def test_crash_between_appends_rolls_forward(engine, tmp_path, queue_dir):
 
     boom = RuntimeError("killed between appends")
 
-    def crash(_moves):
-        raise boom
+    apply_moves = engine._apply_moves
 
-    orig = loader._apply_moves
-    loader._apply_moves = crash
+    def crash(path, manifest):
+        if len(manifest["moves"]) == 2:  # the joint dest+log publish
+            raise boom
+        apply_moves(path, manifest)  # the work table's own publish
+
+    engine._apply_moves = crash
     with pytest.raises(RuntimeError):
         loader.run_once()
-    loader._apply_moves = orig
+    del engine._apply_moves
     # manifest exists; neither table is published yet
     assert not engine.table_exists("load_test")
-    txs = os.listdir(loader._tx_dir)
+    txs = os.listdir(engine._tx_dir)
     assert any(t.endswith(".json") for t in txs)
 
     # retry: recover() rolls the manifest forward, then the anti-join
@@ -225,7 +228,7 @@ def test_crash_between_appends_rolls_forward(engine, tmp_path, queue_dir):
     assert engine.table("load_test").count() == 1
     logged = {r.data_file for r in engine.table("load_test_l").collect()}
     assert logged == {"20240101_0000_00.json"}
-    assert os.listdir(loader._tx_dir) == []
+    assert os.listdir(engine._tx_dir) == []
 
 
 def test_crash_before_commit_reloads_cleanly(engine, tmp_path, queue_dir):
@@ -386,7 +389,7 @@ def test_crash_after_both_deltas_staged_reloads_once(engine, tmp_path, queue_dir
     assert len([d for d in os.listdir(parent) if ".__delta__" in d]) == 2
     assert not engine.table_exists("load_test")
     assert not engine.table_exists("load_test_l")
-    assert not os.path.isdir(loader._tx_dir) or os.listdir(loader._tx_dir) == []
+    assert not os.path.isdir(engine._tx_dir) or os.listdir(engine._tx_dir) == []
 
     stats = loader.run_once()
     assert stats["loaded_files"] == 1
@@ -395,7 +398,7 @@ def test_crash_after_both_deltas_staged_reloads_once(engine, tmp_path, queue_dir
         "20240101_0000_00.json"
     ]
     assert not [d for d in os.listdir(parent) if ".__delta__" in d]
-    assert os.listdir(loader._tx_dir) == []
+    assert os.listdir(engine._tx_dir) == []
 
 
 LOG_DTYPES = [
