@@ -807,9 +807,11 @@ class SparkEngine:
             dest, cond = m.group(1), m.group(2)
             # SQL DELETE removes only rows where cond IS TRUE; rows where
             # cond evaluates to NULL must be KEPT (3-valued logic). A bare
-            # NOT(cond) would drop them too.
-            kept = self.table(dest).filter(f"NOT coalesce(({cond}), false)")
-            self.save_table(kept, dest, mode="overwrite")
+            # NOT(cond) would drop them too. The writer lock, held from
+            # read to publish, keeps appends out.
+            with self.locked(dest):
+                kept = self.table(dest).filter(f"NOT coalesce(({cond}), false)")
+                self.save_table(kept, dest, mode="overwrite")
             return None
         if kind == "create":
             m = re.match(

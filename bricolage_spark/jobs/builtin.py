@@ -175,7 +175,8 @@ def insert_delta(job: Job) -> JobResult:
     """jobclass/insert-delta.rb:1-31 — idempotent partition upsert.
 
     DELETE FROM dest WHERE delete-cond; INSERT…SELECT — atomically:
-    old-minus-cond ∪ new-rows staged and published as one overwrite;
+    old-minus-cond ∪ new-rows staged and published as one overwrite,
+    under dest's writer lock from the read to the publish;
     after a crash the next engine open leaves dest whole (old or new,
     never missing), so a re-run keeps every row outside delete-cond
     (the reference gets this from a Redshift transaction).
@@ -186,15 +187,16 @@ def insert_delta(job: Job) -> JobResult:
     new_rows = job.engine.execute_script(select_sql)
     if new_rows is None:
         raise ParameterError("insert-delta SQL must end with a SELECT")
-    if job.engine.table_exists(dest):
-        # SQL DELETE semantics: remove rows where cond IS TRUE only —
-        # rows where cond is NULL (e.g. NULL dt vs dt = '2024-01-01')
-        # must survive the delta rewrite.
-        kept = job.engine.table(dest).filter(f"NOT coalesce(({cond}), false)")
-        final = kept.unionByName(new_rows)
-    else:
-        final = new_rows
-    n = job.engine.save_table(final, dest, mode="overwrite")
+    with job.engine.locked(dest):  # no append lands between read and publish
+        if job.engine.table_exists(dest):
+            # SQL DELETE semantics: remove rows where cond IS TRUE only —
+            # rows where cond is NULL (e.g. NULL dt vs dt = '2024-01-01')
+            # must survive the delta rewrite.
+            kept = job.engine.table(dest).filter(f"NOT coalesce(({cond}), false)")
+            final = kept.unionByName(new_rows)
+        else:
+            final = new_rows
+        n = job.engine.save_table(final, dest, mode="overwrite")
     _post_ops(job, dest)
     return JobResult(message=f"insert-delta into {dest} (cond: {cond})", rows=n)
 

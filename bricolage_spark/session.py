@@ -11,15 +11,58 @@ The defaults are chosen for correctness-at-scale first:
 - Arrow enabled for any pandas-UDF path (the slow-path escape hatch).
 - Timestamps kept in session-local UTC so DuckDB-oracle comparisons and
   Parquet round-trips are stable.
+- Spark's generated-code cache holds 1000 classes, not 100: one
+  curation_net net generates 328 distinct classes, and at 100 every warm
+  net compiled about 348 of them again (1.7-2.5 s of Janino, counted by
+  ``CodegenMetrics``); at 1000 a warm net compiles none.
+
+Cold start. Bricolage runs one fresh process per net or batch, and on a
+4-vCPU host most of a session's start is the JVM loading and
+interpreting the ~17k classes Spark needs. ``get_spark`` therefore
+launches the driver JVM with a class-data-sharing archive of those
+classes (JDK 17 dynamic AppCDS), so later processes map them instead:
+
+- The archive is ``${XDG_CACHE_HOME:-~/.cache}/bricolage_spark/jvm/
+  <key>.jsa``; the key hashes the ``java`` binary and every jar in
+  ``$SPARK_HOME/jars`` (name, size, mtime), and a new archive replaces
+  those of other keys.
+- The first process that finds none builds it: its JVM starts with
+  ``-XX:+RecordDynamicDumpInfo``, runs one action, and ``jcmd VM.cds
+  dynamic_dump`` writes the loaded classes (about 97 MB; that one start
+  takes 11-15 s longer on a 4-vCPU host).
+- CDS refuses a non-empty directory on the classpath, and Spark's
+  launcher puts ``$SPARK_CONF_DIR`` (default ``$SPARK_HOME/conf``) first.
+  When that directory holds only ``*.template`` files, which Spark never
+  reads, ``SPARK_CONF_DIR`` points at an empty directory next to the
+  archive while the JVM launches.
+- The JVM launches exactly as without an archive when the conf
+  directory holds a real file (``spark-defaults.conf``, ``log4j2
+  .properties``, ...), when a driver JVM is already up, and, with one
+  line on stderr, when the cache is not writable, the JDK is older than
+  17 or has no ``jcmd``. A failed dump (or a non-empty directory
+  elsewhere on the classpath, which would end the JVM mid-dump) leaves
+  no archive and the session running. An archive the JVM could not map
+  turns off all class sharing for that one process; it is deleted, so
+  the next process rebuilds it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import shlex
+import shutil
+import subprocess
+import sys
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 _APP_NAME = "bricolage_spark"
+_MIN_JDK = 17  # -XX:+RecordDynamicDumpInfo and jcmd VM.cds dynamic_dump
+_DUMP_TIMEOUT_S = 120
 
 
 def default_parallelism() -> int:
@@ -118,10 +161,180 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # --- generated code ----------------------------------------------
+        # a JVM-wide cache of compiled classes (static): 1000 entries hold
+        # about three curation nets, so a warm net compiles none (see the
+        # module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return _launch(builder, (extra_conf or {}).get("spark.driver.extraJavaOptions", ""))
+
+
+def _launch(builder: SparkSession.Builder, java_opts: str) -> SparkSession:
+    """``builder.getOrCreate()``, with the driver JVM mapping the class
+    archive, or recording the classes it loads and writing one."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:  # noqa: SLF001
+        return builder.getOrCreate()  # the driver JVM is already up
+    archive = _class_archive()
+    if archive is None:
+        return builder.getOrCreate()
+    path, build = archive
+    flags = "-XX:+RecordDynamicDumpInfo" if build else (
+        f"-XX:SharedArchiveFile={shlex.quote(path)} -Xshare:auto"
+    )
+    # CDS warnings stay off stdout, which CLI and benchmark callers read
+    builder.config("spark.driver.extraJavaOptions", f"{java_opts} {flags} -Xlog:cds*=off".strip())
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = os.path.join(os.path.dirname(path), "conf")
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if build:
+        _dump_class_archive(spark, path)
+    elif "sharing" not in spark._jvm.System.getProperty("java.vm.info"):  # noqa: SLF001
+        # a corrupt archive turns off ALL class sharing, the JDK's own
+        # base archive included: drop it so the next start rebuilds it
+        _drop(path)
+        _skip(f"{path} did not map; removed, the next start rebuilds it")
+    return spark
+
+
+def archive_key(java: str, jars_dir: str) -> str:
+    """Names the class archive of one JDK and one set of Spark jars: a
+    hash of the ``java`` binary's realpath, size and mtime and of each
+    jar's name, size and mtime. CDS itself refuses an archive whose
+    jars changed; the key makes a changed install build a new one."""
+    h = hashlib.sha256()
+    for path, name in [(java, java)] + [
+        (os.path.join(jars_dir, n), n) for n in sorted(os.listdir(jars_dir))
+    ]:
+        st = os.stat(path)
+        h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:20]
+
+
+def _class_archive() -> tuple[str, bool] | None:
+    """``(archive path, build?)`` for the driver JVM about to launch, or
+    None to launch it as without an archive."""
+    spark_home = _find_spark_home()
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        names = os.listdir(conf)
+    except OSError:
+        names = []
+    if any(not n.endswith(".template") for n in names):
+        return None  # a real config (defaults, log4j2, hive-site): keep it
+    java_home = os.environ.get("JAVA_HOME")
+    runner = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if not runner or not os.path.isfile(runner):
+        return None  # spark-submit reports the missing JDK
+    java = os.path.realpath(runner)
+    java_home = os.path.dirname(os.path.dirname(java))
+    if _jdk_major(java_home) < _MIN_JDK:
+        return _skip(f"the JDK at {java_home} is older than {_MIN_JDK}")
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "bricolage_spark",
+        "jvm",
+    )
+    try:
+        # the empty directory that stands in for the template-only conf
+        # dir: JDK 17 CDS refuses a non-empty directory on the classpath
+        os.makedirs(os.path.join(cache, "conf"), exist_ok=True)
+        if not os.access(cache, os.W_OK):
+            raise PermissionError(f"{cache} is not writable")
+        key = archive_key(java, os.path.join(spark_home, "jars"))
+    except OSError as e:
+        return _skip(f"cache unusable: {e}")
+    path = os.path.join(cache, f"{key}.jsa")
+    if os.path.isfile(path):
+        return path, False
+    if not os.path.isfile(os.path.join(java_home, "bin", "jcmd")):
+        return _skip(f"no jcmd in {java_home}/bin to write one")
+    return path, True
+
+
+def _dump_class_archive(spark: SparkSession, path: str) -> None:
+    """Run one action, so the classes a session's first job needs are
+    loaded, then have the JVM write every loaded class to ``path``
+    (``jcmd VM.cds dynamic_dump``). Each builder writes its own
+    temporary file and renames it into place, so concurrent builders
+    need no lock."""
+    spark.range(1).count()
+    jvm = spark._jvm  # noqa: SLF001
+    # a dump with a non-empty directory on the classpath ends the JVM
+    # (e.g. a HADOOP_CONF_DIR, which Spark's launcher appends)
+    for entry in jvm.System.getProperty("java.class.path").split(os.pathsep):
+        if os.path.isdir(entry) and os.listdir(entry):
+            return _skip(f"{entry} on the classpath is a non-empty directory")
+    jcmd = os.path.join(jvm.System.getProperty("java.home"), "bin", "jcmd")
+    pid = str(jvm.java.lang.ProcessHandle.current().pid())
+    cache = os.path.dirname(path)
+    for name in os.listdir(cache):  # a killed builder's leftover
+        m = re.fullmatch(r".*\.jsa\.tmp-(\d+)", name)
+        if m and not _alive(int(m.group(1))):
+            _drop(os.path.join(cache, name))
+    tmp = f"{path}.tmp-{os.getpid()}"
+    # the JDK prints "Dynamic dump to file ..." on the JVM's System.out
+    system, stdout = jvm.System, jvm.System.out
+    system.setOut(system.err)
+    try:
+        out = subprocess.run(
+            [jcmd, pid, "VM.cds", "dynamic_dump", tmp],
+            capture_output=True, text=True, timeout=_DUMP_TIMEOUT_S,
+        )
+        if out.returncode != 0 or not os.path.getsize(tmp):
+            lines = (out.stdout + out.stderr).strip().splitlines()
+            raise OSError(lines[-1] if lines else f"jcmd exited {out.returncode}")
+        os.replace(tmp, path)
+    except (OSError, subprocess.SubprocessError) as e:
+        _drop(tmp)
+        return _skip(f"dump to {path} failed: {e}")
+    finally:
+        system.setOut(stdout)
+    for name in os.listdir(cache):  # the archives of other JDKs or jars
+        if name.endswith(".jsa") and name != os.path.basename(path):
+            _drop(os.path.join(cache, name))
+
+
+def _jdk_major(java_home: str) -> int:
+    """The feature release of the JDK at ``java_home``, from its
+    ``release`` file (``JAVA_VERSION="17.0.20"``; a ``"1.8.0"`` reads
+    as 1); 0 when unknown."""
+    try:
+        with open(os.path.join(java_home, "release")) as f:
+            m = re.search(r'^JAVA_VERSION="(\d+)', f.read(), re.M)
+    except OSError:
+        return 0
+    return int(m.group(1)) if m else 0
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _drop(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
+
+def _skip(reason: str) -> None:
+    """One line on stderr; the JVM launches, or runs on, without an archive."""
+    print(f"bricolage_spark: no JVM class archive: {reason}", file=sys.stderr)
 
 
 def session_token(spark: SparkSession | None = None) -> str:

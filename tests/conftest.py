@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 import pytest
 
@@ -48,8 +49,19 @@ def spark_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@pytest.fixture(scope="session", autouse=True)
+def xdg_cache():
+    """A per-session ``XDG_CACHE_HOME``, so the session's JVM class archive
+    (and those of subprocesses, which inherit it) never lands in the
+    user's cache."""
+    with tempfile.TemporaryDirectory(prefix="bricolage-cache-") as cache, \
+            pytest.MonkeyPatch.context() as mp:
+        mp.setenv("XDG_CACHE_HOME", cache)
+        yield cache
+
+
 @pytest.fixture(scope="session")
-def spark():
+def spark(xdg_cache):
     s = get_spark(
         "tests",
         master="local[4]",

@@ -356,6 +356,55 @@ def test_vacuum_and_stream_commit_interleaved_lose_no_rows(engine, tmp_path):
     ]
 
 
+@pytest.mark.parametrize("rewrite", ["delete", "insert-delta"])
+def test_an_append_racing_a_delete_rewrite_loses_no_rows(rewrite, engine, spark, tmp_path):
+    """``DELETE FROM`` and ``insert-delta`` read the table, then overwrite
+    it with what they kept. An append that lands between the read and
+    the publish would be overwritten; both hold the table's writer lock
+    from read to publish, so the append waits."""
+    schema = "id int, d string"
+    engine.save_table(
+        spark.createDataFrame([(1, "2024-01-01"), (2, "2024-01-02")], schema), "acc"
+    )
+    home = tmp_path / "home"
+    (home / "subsys").mkdir(parents=True)
+    job = home / "subsys" / "delta.sql.job"
+    job.write_text(
+        "/*\nclass: insert-delta\ndest-table: acc\n"
+        "delete-cond: \"d = '2024-01-02'\"\n*/\n"
+        "select 3 as id, '2024-01-02' as d;\n"
+    )
+    read, appended = threading.Event(), threading.Event()
+    rewriter = threading.current_thread()
+    real_save = engine.save_table
+
+    def save_after_read(df, dest, *a, **kw):
+        # the rewrite's publish: give the appender every chance to land
+        if threading.current_thread() is rewriter and str(dest) == "acc":
+            read.set()
+            appended.wait(timeout=3)
+        return real_save(df, dest, *a, **kw)
+
+    def append():
+        read.wait(timeout=60)
+        real_save(spark.createDataFrame([(9, "2024-01-03")], schema), "acc", mode="append")
+        appended.set()
+
+    engine.save_table = save_after_read
+    t = threading.Thread(target=append)
+    t.start()
+    try:
+        if rewrite == "delete":
+            engine.execute_statement("DELETE FROM acc WHERE d = '2024-01-02'")
+        else:
+            assert Context(engine, home=str(home)).load_job(str(job)).execute().success
+    finally:
+        t.join()
+        del engine.save_table
+    kept = [(1, "2024-01-01")] + ([(3, "2024-01-02")] if rewrite == "insert-delta" else [])
+    assert rows(engine, "acc") == sorted(kept + [(9, "2024-01-03")])
+
+
 _LOADER = r"""
 import os, sys, time
 from bricolage_spark.engine import SparkEngine
@@ -471,6 +520,7 @@ ALLOWED = {
     ("taskqueue.py", "FileTaskQueue.save"),
     ("locks.py", "serialized"),
     ("streaming/streaming_load.py", "FileQueue.dequeue"),
+    ("session.py", "_dump_class_archive"),  # the JVM class archive, not a table
 }
 _GUARDED = {("os", "rename"), ("os", "replace"), ("shutil", "move"), ("shutil", "rmtree")}
 
