@@ -30,20 +30,26 @@ classes (JDK 17 dynamic AppCDS), so later processes map them instead:
   ``-XX:+RecordDynamicDumpInfo``, runs one action, and ``jcmd VM.cds
   dynamic_dump`` writes the loaded classes (about 97 MB; that one start
   takes 11-15 s longer on a 4-vCPU host).
-- CDS refuses a non-empty directory on the classpath, and Spark's
-  launcher puts ``$SPARK_CONF_DIR`` (default ``$SPARK_HOME/conf``) first.
-  When that directory holds only ``*.template`` files, which Spark never
-  reads, ``SPARK_CONF_DIR`` points at an empty directory next to the
-  archive while the JVM launches.
+- CDS refuses a non-empty directory on the classpath before the last
+  jar, and Spark's launcher puts ``$SPARK_CONF_DIR`` (default
+  ``$SPARK_HOME/conf``) first. When that directory holds only
+  ``*.template`` files, which Spark never reads, ``SPARK_CONF_DIR``
+  points at an empty directory next to the archive while the JVM
+  launches. A directory after the jars, such as the ``HADOOP_CONF_DIR``
+  the launcher appends, does not stop the archive.
 - The JVM launches exactly as without an archive when the conf
   directory holds a real file (``spark-defaults.conf``, ``log4j2
   .properties``, ...), when a driver JVM is already up, and, with one
   line on stderr, when the cache is not writable, the JDK is older than
-  17 or has no ``jcmd``. A failed dump (or a non-empty directory
-  elsewhere on the classpath, which would end the JVM mid-dump) leaves
-  no archive and the session running. An archive the JVM could not map
-  turns off all class sharing for that one process; it is deleted, so
-  the next process rebuilds it.
+  17 or has no ``jcmd``. A failed dump (or a non-empty directory before
+  a jar on the classpath, which would end the JVM mid-dump) leaves no
+  archive and the session running. A failed dump also leaves a
+  ``<key>.failed`` marker beside where the archive would be: while it
+  exists, later processes launch without an archive and print nothing
+  (delete it to try again; a new key ignores it, and a later build of
+  another key sweeps it). An archive the JVM could not map turns off
+  all class sharing for that one process; it is deleted, so the next
+  process rebuilds it.
 """
 
 from __future__ import annotations
@@ -55,6 +61,7 @@ import shlex
 import shutil
 import subprocess
 import sys
+from contextlib import suppress
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
@@ -255,6 +262,8 @@ def _class_archive() -> tuple[str, bool] | None:
     path = os.path.join(cache, f"{key}.jsa")
     if os.path.isfile(path):
         return path, False
+    if os.path.exists(os.path.join(cache, f"{key}.failed")):
+        return None  # this JDK and these jars failed to dump before
     if not os.path.isfile(os.path.join(java_home, "bin", "jcmd")):
         return _skip(f"no jcmd in {java_home}/bin to write one")
     return path, True
@@ -265,12 +274,16 @@ def _dump_class_archive(spark: SparkSession, path: str) -> None:
     loaded, then have the JVM write every loaded class to ``path``
     (``jcmd VM.cds dynamic_dump``). Each builder writes its own
     temporary file and renames it into place, so concurrent builders
-    need no lock."""
+    need no lock. A failed dump leaves a ``<key>.failed`` marker
+    instead, so later processes do not try again."""
     spark.range(1).count()
     jvm = spark._jvm  # noqa: SLF001
-    # a dump with a non-empty directory on the classpath ends the JVM
-    # (e.g. a HADOOP_CONF_DIR, which Spark's launcher appends)
-    for entry in jvm.System.getProperty("java.class.path").split(os.pathsep):
+    # a dump with a non-empty directory before a jar on the classpath
+    # ends the JVM; one after the jars (a HADOOP_CONF_DIR, which Spark's
+    # launcher appends) is fine
+    entries = jvm.System.getProperty("java.class.path").split(os.pathsep)
+    last_jar = max((i for i, e in enumerate(entries) if e.endswith(".jar")), default=0)
+    for entry in entries[:last_jar]:
         if os.path.isdir(entry) and os.listdir(entry):
             return _skip(f"{entry} on the classpath is a non-empty directory")
     jcmd = os.path.join(jvm.System.getProperty("java.home"), "bin", "jcmd")
@@ -281,6 +294,7 @@ def _dump_class_archive(spark: SparkSession, path: str) -> None:
         if m and not _alive(int(m.group(1))):
             _drop(os.path.join(cache, name))
     tmp = f"{path}.tmp-{os.getpid()}"
+    key = os.path.basename(path)[: -len(".jsa")]
     # the JDK prints "Dynamic dump to file ..." on the JVM's System.out
     system, stdout = jvm.System, jvm.System.out
     system.setOut(system.err)
@@ -295,11 +309,14 @@ def _dump_class_archive(spark: SparkSession, path: str) -> None:
         os.replace(tmp, path)
     except (OSError, subprocess.SubprocessError) as e:
         _drop(tmp)
-        return _skip(f"dump to {path} failed: {e}")
+        marker = os.path.join(cache, f"{key}.failed")
+        with suppress(OSError), open(marker, "w") as f:
+            f.write(f"{e}\n")
+        _skip(f"dump to {path} failed: {e}; {marker} stops later tries")
     finally:
         system.setOut(stdout)
-    for name in os.listdir(cache):  # the archives of other JDKs or jars
-        if name.endswith(".jsa") and name != os.path.basename(path):
+    for name in os.listdir(cache):  # the archives and markers of other JDKs or jars
+        if name.endswith((".jsa", ".failed")) and os.path.splitext(name)[0] != key:
             _drop(os.path.join(cache, name))
 
 

@@ -7,13 +7,21 @@ Semantics reproduced from jobclass/streaming_load.rb (531 LoC — SURVEY.md
    strftime-like ``file-name`` pattern (``%Y%m%d-%H%M_%Q`` → named-group
    regex, compile_name_pattern :455-473);
 2. dedup against the **load log** table by ``data_file`` (the
-   reference's right-outer/NOT-IN joins :294-330; here one pushed-down
-   ``data_file IN (...)`` probe) — exactly-once across crash/retry;
+   reference's right-outer/NOT-IN joins :294-330; here one
+   ``data_file IN (...)`` filter over the log's Parquet files, read on
+   the driver with pyarrow: the log is only file names) — exactly-once
+   across crash/retry;
 3. load new files into the work table, ``INSERT INTO dest SELECT * FROM
    work`` (or a custom SQL), and append the load log — atomically (the
-   reference uses one Redshift transaction :166-195; we stage both
-   appends and merge them with one ``SparkEngine.publish``, under the
-   tables' writer locks, so concurrent loaders load each file once);
+   reference uses one Redshift transaction :166-195; here one
+   ``SparkEngine.publish`` manifest, under the tables' writer locks, so
+   concurrent loaders load each file once). Without a custom SQL the
+   batch is one Spark job: its files are parsed and written once, into
+   the work table's stage, and the same Parquet files are hard-linked
+   into the dest delta; the manifest replaces the work table and merges
+   the dest and log deltas (with ``skip-work`` the one write is the dest
+   delta). A custom SQL reads the work table, so that path publishes the
+   work table first and writes the SQL's rows as the dest delta;
 4. dequeue: move each loaded file to ``persistent-path`` (date-templated
    from the file name's captured fields, format_path :429-449).
 
@@ -200,41 +208,70 @@ class StreamingLoader:
     def new_files(self, candidates: list[str]) -> list[str]:
         """The candidates the load log does not name yet, in candidate
         order (exactly-once core, streaming_load.rb:294-312). One
-        ``data_file IN (<candidate basenames>)`` probe, pushed down to
-        the log's Parquet scan, so the driver holds O(candidates) names
-        however long the log grows."""
+        ``data_file IN (<candidate basenames>)`` filter over the log's
+        Parquet files, read on the driver with pyarrow: the log is only
+        file names, and a Spark job costs more than reading them. Spark's
+        ``_SUCCESS`` and ``.crc`` siblings are skipped. Each driver-written
+        log part is sorted by ``data_file``, so row-group statistics prune
+        the scan (through the candidates' name range: pyarrow prunes
+        nothing on an ``IN`` alone), and the driver holds O(candidates)
+        names however long the log grows."""
         if not candidates or not self.engine.table_exists(self.log_table):
             return list(candidates)
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
         names = [os.path.basename(p) for p in candidates]
-        probe = (
-            self.engine.table(self.log_table)
-            .select("data_file")
-            .where(F.col("data_file").isin(names))
+        log = ds.dataset(
+            self.engine.table_dir(self.log_table),
+            schema=pa.schema([("data_file", pa.string())]),
+            format="parquet",
         )
-        loaded = {r.data_file for r in probe.collect()}
+        data_file = ds.field("data_file")
+        probe = (data_file >= min(names)) & (data_file <= max(names)) & data_file.isin(names)
+        loaded = set(log.to_table(filter=probe)["data_file"].to_pylist())
         return [p for p, name in zip(candidates, names) if name not in loaded]
 
-    # -- joint dest+log commit (streaming_load.rb:166-195 parity) -----------
+    # -- joint work+dest+log commit (streaming_load.rb:166-195 parity) ------
     #
-    # The reference appends dest AND the load log in ONE Redshift
-    # transaction; here ONE ``SparkEngine.publish`` merges both staged
-    # deltas, with the batch, probe to dequeue, under the tables' locks.
+    # The reference loads the work table, appends dest AND the load log in
+    # ONE Redshift transaction; here ONE ``SparkEngine.publish`` replaces
+    # the work table and merges the staged deltas, with the batch, probe
+    # to dequeue, under the tables' locks.
 
     def _stage_delta(self, df: DataFrame, table: str, txid: str) -> tuple[str, int]:
-        """Write ``df`` as parquet into a hidden staging dir; returns
+        """Write ``df`` as parquet into a hidden staging sibling of
+        ``table``: ``__stage__`` for the work table, which the batch
+        replaces, ``__delta__`` for a table it appends to. Returns
         (stage_dir, row_count) — rows observed during the write itself."""
-        stage = self.engine.table_dir(table) + f".__delta__{txid}"
+        kind = "stage" if table == self.work_table else "delta"
+        stage = self.engine.table_dir(table) + f".__{kind}__{txid}"
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows_written"))
         df.write.mode("overwrite").parquet(stage)
         return stage, int(obs.get["rows_written"])
 
+    def _link_delta(self, stage: str, table: str, txid: str) -> str:
+        """Hard-link the Parquet files of ``stage`` into ``table``'s
+        hidden ``__delta__`` sibling, so the dest gets the work table's
+        rows without a second write (skipping ``_SUCCESS`` and ``.crc``,
+        as the merge does). A shared inode is safe: no Parquet file is
+        ever rewritten in place, and both siblings sit in one warehouse,
+        so on one filesystem. Returns the delta dir."""
+        delta = self.engine.table_dir(table) + f".__delta__{txid}"
+        os.makedirs(delta)
+        for name in os.listdir(stage):
+            if not name.startswith(("_", ".")):
+                os.link(os.path.join(stage, name), os.path.join(delta, name))
+        return delta
+
     def _stage_log_delta(self, files: list[str], txid: str) -> str:
         """Write the batch's load-log rows into the log's hidden staging
         dir as one Parquet file, on the driver: the rows are only file
         names, cheaper to write with pyarrow than with a Spark job. Same
-        five columns and types as a Spark-written log part. Returns the
-        stage dir."""
+        five columns and types as a Spark-written log part; the rows keep
+        the (sorted) queue order, so the part's ``data_file`` statistics
+        let ``new_files`` skip it. Returns the stage dir."""
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -293,7 +330,13 @@ class StreamingLoader:
         return self.engine.sql(last)
 
     def run_once(self, load_only: bool = False) -> dict:
-        """One micro-batch. Returns counters."""
+        """One micro-batch. Returns counters.
+
+        Without a custom SQL the batch's files are parsed and written
+        once (one Spark job, at most one part file per core) and the
+        same Parquet files become the dest delta; one publish commits
+        the work table, the dest and the log. A custom SQL reads the
+        work table, which is therefore published before it runs."""
         with self.engine.locked(*filter(None, (self.dest_table, self.log_table, self.work_table))):
             self.recover()
             candidates = self.queue.queued_files()
@@ -324,18 +367,23 @@ class StreamingLoader:
                 reader.parquet(*new) if self.fmt == "parquet" else getattr(reader, self.fmt)(new)
             )
 
-            # work table (skip-work mode loads straight into dest)
-            if self.work_table:
-                self.engine.save_table(df, self.work_table, mode="overwrite")
-                work_df = self.engine.table(self.work_table)
-                insert_df = self._select_df() if self.sql else work_df
-            elif self.sql:
-                insert_df = self._select_df()
-            else:
-                insert_df = df
-
             txid = uuid.uuid4().hex[:12]
-            dest_stage, rows = self._stage_delta(insert_df, self.dest_table, txid)
+            moves = []
+            if self.sql:
+                if self.work_table:  # the custom SQL reads the work table
+                    self.engine.save_table(df, self.work_table, mode="overwrite")
+                insert_df = self._select_df()
+                dest_stage, rows = self._stage_delta(insert_df, self.dest_table, txid)
+            else:
+                # a read packs several small files into each task; without
+                # the coalesce each task would add a part file to the dest
+                insert_df = df.coalesce(spark.sparkContext.defaultParallelism)
+                if self.work_table:
+                    work_stage, rows = self._stage_delta(insert_df, self.work_table, txid)
+                    dest_stage = self._link_delta(work_stage, self.dest_table, txid)
+                    moves.append(("replace", work_stage, self.engine.table_dir(self.work_table)))
+                else:  # skip-work mode loads straight into dest
+                    dest_stage, rows = self._stage_delta(insert_df, self.dest_table, txid)
             log_stage = self._stage_log_delta(new, txid)
             # the dest's schema after the append: the delta's own when the
             # delta is the whole table or matches what the table already
@@ -346,8 +394,12 @@ class StreamingLoader:
             ):
                 dest_schema = None
 
-            self.engine.publish([("merge", dest_stage, self.engine.table_dir(self.dest_table)),
-                                 ("merge", log_stage, self.engine.table_dir(self.log_table))])
+            self.engine.publish(moves + [
+                ("merge", dest_stage, self.engine.table_dir(self.dest_table)),
+                ("merge", log_stage, self.engine.table_dir(self.log_table)),
+            ])
+            if moves:
+                self.engine.register(self.work_table, df.schema)
             self.engine.register(self.dest_table, dest_schema)
             self.engine.register(self.log_table, _LOG_SCHEMA)
 

@@ -203,13 +203,13 @@ def case_rebuild_rename(spark, tmp):
     return setup, run, state
 
 
-def case_stream_commit(spark, tmp):
+def case_stream_commit(spark, tmp, work_table=None):
     queue = tmp / "queue"
     queue.mkdir()
 
     def loader(e):
         q = FileQueue(str(queue), str(tmp / "done" / "%Y"), "%Y%m%d_%H%M_%Q.json")
-        return StreamingLoader(e, q, "ev", "ev_l", fmt="json")
+        return StreamingLoader(e, q, "ev", "ev_l", work_table=work_table, fmt="json")
 
     def setup(e):
         (queue / "20240101_0000_00.json").write_text('{"x": 1}\n')
@@ -217,9 +217,18 @@ def case_stream_commit(spark, tmp):
         (queue / "20240101_0100_00.json").write_text('{"x": 2}\n{"x": 3}\n')
 
     def state(e):
-        return {"ev": rows(e, "ev"), "log": sorted(r.data_file for r in e.table("ev_l").collect())}
+        out = {"ev": rows(e, "ev"), "log": sorted(r.data_file for r in e.table("ev_l").collect())}
+        if work_table:
+            out[work_table] = rows(e, work_table)
+        return out
 
     return setup, lambda e: loader(e).run_once(), state
+
+
+def case_stream_commit_work(spark, tmp):
+    """The default job shape: the work table's files, hard-linked, are
+    the dest delta, and one manifest commits work, dest and log."""
+    return case_stream_commit(spark, tmp, work_table="ev_wk")
 
 
 CASES = {
@@ -231,6 +240,7 @@ CASES = {
     "drop": case_drop,
     "rebuild_rename": case_rebuild_rename,
     "stream_commit": case_stream_commit,
+    "stream_commit_work": case_stream_commit_work,
 }
 
 

@@ -21,11 +21,18 @@ import json, os, subprocess, sys, time
 import bricolage_spark.session as session
 
 mode, barrier = sys.argv[1], sys.argv[2:]
-if mode == "fail-dump":
-    # jcmd asked to write where no directory exists: a real failed dump
-    real_run = subprocess.run
-    session.subprocess.run = lambda cmd, **kw: real_run(
-        cmd[:-1] + [os.path.join(os.path.dirname(cmd[-1]), "missing", "x.jsa")], **kw)
+real_run, jcmd_runs = subprocess.run, []
+
+
+def run(cmd, **kw):
+    jcmd_runs.append(cmd)
+    if mode == "fail-dump":
+        # jcmd asked to write where no directory exists: a real failed dump
+        cmd = cmd[:-1] + [os.path.join(os.path.dirname(cmd[-1]), "missing", "x.jsa")]
+    return real_run(cmd, **kw)
+
+
+session.subprocess.run = run
 if barrier:
     me, other = barrier
     open(me, "w").close()
@@ -38,8 +45,13 @@ assert spark.range(5).count() == 5
 jvm = spark._jvm
 with open(f"/proc/{jvm.java.lang.ProcessHandle.current().pid()}/maps") as f:
     maps = sorted({line.split()[-1] for line in f if line.rstrip().endswith(".jsa")})
-print(json.dumps({"info": jvm.System.getProperty("java.vm.info"), "maps": maps,
-                  "probe": spark.conf.get("spark.bricolage.probe", None)}))
+print(json.dumps({
+    "info": jvm.System.getProperty("java.vm.info"), "maps": maps,
+    "probe": spark.conf.get("spark.bricolage.probe", None),
+    "hadoop": spark._jsc.hadoopConfiguration().get("bricolage.probe"),
+    "jvm_args": list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()),
+    "jcmd_runs": len(jcmd_runs),
+}))
 """
 
 
@@ -132,12 +144,65 @@ def test_a_corrupt_archive_is_dropped_and_rebuilt(tmp_path):
     assert _archives(cache) == [archive]
 
 
+def _markers(cache):
+    return sorted(n for n in os.listdir(_jvm_dir(cache)) if n.endswith(".failed"))
+
+
 def test_a_failed_dump_starts_the_session_and_leaves_nothing(tmp_path):
     cache = tmp_path / "cache"
-    got, err = _start(_env(tmp_path, cache), "fail-dump")
+    env = _env(tmp_path, cache)
+    got, err = _start(env, "fail-dump")
     assert "sharing" in got["info"]
     assert "no JVM class archive: dump to" in err
     assert _archives(cache) == []
+    (marker,) = _markers(cache)
+    # the failure is remembered: the next process neither records nor
+    # dumps, and says nothing (Spark's own start-up lines aside)
+    again, err = _start(env)
+    assert again["jcmd_runs"] == 0
+    assert not any("RecordDynamicDumpInfo" in a for a in again["jvm_args"])
+    assert "bricolage_spark" not in err
+    assert "sharing" in again["info"]
+    assert _archives(cache) == [] and _markers(cache) == [marker]
+
+
+def test_a_marker_of_another_jdk_or_jar_set_is_ignored_and_swept(tmp_path):
+    cache = tmp_path / "cache"
+    stale = _jvm_dir(cache)
+    stale.mkdir(parents=True)
+    (stale / "0123456789abcdef0123.failed").write_text("an old failure\n")
+    (stale / "0123456789abcdef0123.jsa").write_text("an old archive")
+    built, err = _start(_env(tmp_path, cache))
+    assert built["jcmd_runs"] == 1
+    assert "no JVM class archive" not in err
+    (archive,) = _archives(cache)
+    assert archive != "0123456789abcdef0123.jsa"
+    assert _markers(cache) == []
+
+
+def test_a_hadoop_conf_dir_after_the_jars_keeps_the_archive(tmp_path):
+    """Spark's launcher appends HADOOP_CONF_DIR after the jars, where CDS
+    accepts a non-empty directory: the archive is built and mapped, and
+    both starts read the Hadoop configuration from that directory."""
+    hadoop = tmp_path / "hadoop-conf"
+    hadoop.mkdir()
+    (hadoop / "core-site.xml").write_text(
+        '<?xml version="1.0"?>\n<configuration><property>'
+        "<name>bricolage.probe</name><value>from-core-site</value>"
+        "</property></configuration>\n"
+    )
+    cache = tmp_path / "cache"
+    env = _env(tmp_path, cache, HADOOP_CONF_DIR=str(hadoop))
+    built, err = _start(env)
+    assert "no JVM class archive" not in err
+    assert built["hadoop"] == "from-core-site"
+    (archive,) = _archives(cache)
+    assert archive.endswith(".jsa")
+    mapped, err = _start(env)
+    assert str(_jvm_dir(cache) / archive) in mapped["maps"]
+    assert "sharing" in mapped["info"]
+    assert mapped["hadoop"] == "from-core-site"
+    assert "no JVM class archive" not in err
 
 
 def test_two_builders_at_once_leave_one_archive_and_no_temporary_file(tmp_path):

@@ -197,7 +197,7 @@ def test_streaming_load_jobclass(engine, tmp_path, queue_dir):
 
 def test_crash_between_appends_rolls_forward(engine, tmp_path, queue_dir):
     """Kill the loader AT the commit point (manifest written, moves not
-    applied): recovery must publish dest AND log together — no
+    applied): recovery must publish work, dest AND log together — no
     double-load on retry (streaming_load.rb:166-195 joint transaction)."""
     write_files(queue_dir, {"20240101_0000_00.json": ['{"x": 1, "y": "a"}']})
     loader = make_loader(engine, queue_dir, tmp_path)
@@ -205,11 +205,12 @@ def test_crash_between_appends_rolls_forward(engine, tmp_path, queue_dir):
     boom = RuntimeError("killed between appends")
 
     apply_moves = engine._apply_moves
+    dest_merge = ["merge", engine.table_dir("load_test")]
 
     def crash(path, manifest):
-        if len(manifest["moves"]) == 2:  # the joint dest+log publish
-            raise boom
-        apply_moves(path, manifest)  # the work table's own publish
+        if any([kind, dest] == dest_merge for kind, _src, dest in manifest["moves"]):
+            raise boom  # the joint commit: the one that merges the dest
+        apply_moves(path, manifest)
 
     engine._apply_moves = crash
     with pytest.raises(RuntimeError):
@@ -229,6 +230,7 @@ def test_crash_between_appends_rolls_forward(engine, tmp_path, queue_dir):
     logged = {r.data_file for r in engine.table("load_test_l").collect()}
     assert logged == {"20240101_0000_00.json"}
     assert os.listdir(engine._tx_dir) == []
+    assert [(r.x, r.y) for r in engine.table("load_test_wk").collect()] == [(1, "a")]
 
 
 def test_crash_before_commit_reloads_cleanly(engine, tmp_path, queue_dir):
@@ -458,30 +460,17 @@ def test_dequeue_only_moves_just_the_logged_files(engine, tmp_path, queue_dir):
     write_files(queue_dir, {"20240101_0000_00.json": ['{"x": 1, "y": "a"}']})
     make_loader(engine, queue_dir, tmp_path).run_once(load_only=True)
     write_files(queue_dir, {"20240101_0100_00.json": ['{"x": 2, "y": "b"}']})
-    home = tmp_path / "home"
-    (home / "subsys").mkdir(parents=True)
-    job_path = home / "subsys" / "deq.job"
-    job_path.write_text(
-        "class: streaming_load\n"
-        "dest-table: load_test\n"
-        f"queue-path: {queue_dir}\n"
-        f"persistent-path: {tmp_path}/archive/%Y/%m/%d\n"
-        "file-name: '%Y%m%d_%H%M_%Q.json'\n"
-        "dequeue-only: true\n"
-    )
-    r = Context(engine, home=str(home)).load_job(str(job_path)).execute()
+    home, job_path = _dequeue_only_job(tmp_path, queue_dir)
+    r = Context(engine, home=home).load_job(job_path).execute()
     assert r.message == "dequeued 1 file(s)"
     assert sorted(os.listdir(queue_dir)) == ["20240101_0100_00.json"]
     assert (tmp_path / "archive" / "2024" / "01" / "01" / "20240101_0000_00.json").exists()
 
 
-def test_warm_batch_spark_job_budget(engine, spark, tmp_path, queue_dir):
-    """A warm batch's fixed cost, counted in Spark jobs: the log probe,
-    the work-table write and the dest delta write. Re-reading a table's
-    schema, or building the log delta as a Spark frame, would add jobs."""
+def _warm_batch_jobs(spark, loader, queue_dir):
+    """Spark jobs of a warm batch of two files, after a cold one."""
     from conftest import spark_jobs
 
-    loader = make_loader(engine, queue_dir, tmp_path)
     write_files(queue_dir, {"20240101_0000_00.json": ['{"x": 1, "y": "a"}']})
     loader.run_once()  # cold: creates dest, log and work table
     write_files(queue_dir, {
@@ -491,4 +480,110 @@ def test_warm_batch_spark_job_budget(engine, spark, tmp_path, queue_dir):
     stats = {}
     n = spark_jobs(spark, lambda: stats.update(loader.run_once()))
     assert stats["loaded_files"] == 2 and stats["rows"] == 2
-    assert n <= 4, f"a warm batch ran {n} Spark jobs"
+    return n
+
+
+def test_warm_batch_spark_job_budget(engine, spark, tmp_path, queue_dir):
+    """A warm batch's fixed cost, counted in Spark jobs: one, the work
+    table's write, whose files also become the dest delta. A Spark probe
+    of the log, a second write, re-reading a table's schema or building
+    the log delta as a Spark frame would each add a job."""
+    loader = make_loader(engine, queue_dir, tmp_path)
+    n = _warm_batch_jobs(spark, loader, queue_dir)
+    assert n == 1, f"a warm batch ran {n} Spark jobs"
+    # the work table holds the batch, the dest every batch
+    assert sorted((r.x, r.y) for r in engine.table("load_test_wk").collect()) == [(2, "b"), (3, "c")]
+    assert engine.table("load_test").count() == 3
+
+
+def test_warm_batch_spark_job_budget_with_custom_sql(engine, spark, tmp_path, queue_dir):
+    """With a custom SQL, which reads the work table, a warm batch still
+    writes twice: the work table, then the SQL's rows as the dest delta."""
+    loader = make_loader(
+        engine, queue_dir, tmp_path,
+        sql="INSERT INTO load_test SELECT x, upper(y) AS y FROM load_test_wk;",
+    )
+    n = _warm_batch_jobs(spark, loader, queue_dir)
+    assert n == 2, f"a warm custom-SQL batch ran {n} Spark jobs"
+    assert sorted((r.x, r.y) for r in engine.table("load_test_wk").collect()) == [(2, "b"), (3, "c")]
+    assert sorted((r.x, r.y) for r in engine.table("load_test").collect()) == [
+        (1, "A"), (2, "B"), (3, "C"),
+    ]
+
+
+def _parts(path):
+    return {n for n in os.listdir(path) if n.endswith(".parquet")}
+
+
+def test_a_batch_adds_at_most_one_part_file_per_core(engine, spark, tmp_path, queue_dir):
+    """Spark's read packs several small files into each task; the batch
+    still adds at most ``defaultParallelism`` part files to the dest, and
+    they are the work table's files, hard-linked."""
+    cores = spark.sparkContext.defaultParallelism
+    loader = make_loader(engine, queue_dir, tmp_path)
+    write_files(queue_dir, {"20240101_0000_00.json": ['{"x": 0, "y": "a"}']})
+    loader.run_once()
+    before = _parts(engine.table_dir("load_test"))
+    n_files = 8 * cores  # more read tasks than cores
+    write_files(queue_dir, {
+        f"20240101_0100_{i:02d}.json": [f'{{"x": {i + 1}, "y": "b"}}'] for i in range(n_files)
+    })
+    assert loader.run_once()["rows"] == n_files
+    added = _parts(engine.table_dir("load_test")) - before
+    assert 1 <= len(added) <= cores
+    work = engine.table_dir("load_test_wk")
+    assert _parts(work) == added
+    dest = engine.table_dir("load_test")
+    for name in added:
+        assert os.path.samefile(os.path.join(work, name), os.path.join(dest, name))
+    assert engine.table("load_test").count() == n_files + 1
+    assert engine.table("load_test_wk").count() == n_files
+
+
+def _dequeue_only_job(tmp_path, queue_dir):
+    home = tmp_path / "home"
+    (home / "subsys").mkdir(parents=True, exist_ok=True)
+    job_path = home / "subsys" / "deq.job"
+    job_path.write_text(
+        "class: streaming_load\n"
+        "dest-table: load_test\n"
+        f"queue-path: {queue_dir}\n"
+        f"persistent-path: {tmp_path}/archive/%Y/%m/%d\n"
+        "file-name: '%Y%m%d_%H%M_%Q.json'\n"
+        "dequeue-only: true\n"
+    )
+    return str(home), str(job_path)
+
+
+@pytest.mark.parametrize("log", ["vacuumed", "truncated", "missing"])
+def test_driver_probe_agrees_with_a_spark_read_of_the_log(log, engine, spark, tmp_path, queue_dir):
+    """The driver's probe of the log names the same files as a Spark read
+    of it: over a log Spark rewrote (``vacuum``: ``_SUCCESS`` and ``.crc``
+    siblings), a log left empty (``truncate``) and no log at all; and
+    ``dequeue-only`` moves exactly the files the Spark read names."""
+    loader = make_loader(engine, queue_dir, tmp_path)
+    if log != "missing":
+        for k in range(3):  # three log parts
+            write_files(queue_dir, {f"20240101_0{k}00_00.json": [f'{{"x": {k}, "y": "a"}}']})
+            loader.run_once(load_only=True)
+        if log == "vacuumed":
+            engine.vacuum("load_test_l", target_partitions=2)
+            names = set(os.listdir(engine.table_dir("load_test_l")))
+            assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+        else:
+            engine.truncate("load_test_l")
+    write_files(queue_dir, {"20240101_0300_00.json": ['{"x": 3, "y": "a"}']})
+    queued = loader.queue.queued_files()
+    assert len(queued) == (1 if log == "missing" else 4)
+    logged = (
+        {r.data_file for r in spark.read.parquet(engine.table_dir("load_test_l")).collect()}
+        if engine.table_exists("load_test_l") else set()
+    )
+    assert (log == "vacuumed") == bool(logged)
+    expected = [p for p in queued if os.path.basename(p) not in logged]
+    assert loader.new_files(queued) == expected
+
+    home, job_path = _dequeue_only_job(tmp_path, queue_dir)
+    r = Context(engine, home=home).load_job(job_path).execute()
+    assert r.message == f"dequeued {len(queued) - len(expected)} file(s)"
+    assert loader.queue.queued_files() == expected
