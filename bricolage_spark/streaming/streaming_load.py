@@ -15,25 +15,41 @@ Semantics reproduced from jobclass/streaming_load.rb (531 LoC — SURVEY.md
    work`` (or a custom SQL), and append the load log — atomically (the
    reference uses one Redshift transaction :166-195; here one
    ``SparkEngine.publish`` manifest, under the tables' writer locks, so
-   concurrent loaders load each file once). Without a custom SQL the
-   batch is one Spark job: its files are parsed and written once, into
-   the work table's stage, and the same Parquet files are hard-linked
-   into the dest delta; the manifest replaces the work table and merges
-   the dest and log deltas (with ``skip-work`` the one write is the dest
-   delta). A custom SQL reads the work table, so that path publishes the
-   work table first and writes the SQL's rows as the dest delta;
+   concurrent loaders load each file once). Without a custom SQL a
+   batch of local files is one Spark job, whatever its file count: its
+   files are parsed and written once, into the work table's stage, and
+   the same Parquet files are hard-linked into the dest delta; the
+   manifest replaces the work table and merges the dest and log deltas
+   (with ``skip-work`` the one write is the dest delta). A custom SQL
+   reads the work table, so that path publishes the work table first and
+   writes the SQL's rows as the dest delta;
 4. dequeue: move each loaded file to ``persistent-path`` (date-templated
    from the file name's captured fields, format_path :429-449).
 
 ``load-only`` / ``dequeue-only`` / ``noop`` flags mirror the reference's
 operational modes.
+
+Backlog batches. Over more root paths than
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32 by
+default) Spark lists a read's paths in a Spark job of its own, one task
+per path. For a queue on the local filesystem that job is pure fixed
+cost: building the DataFrame over 100 local JSON files took 0.68-0.74 s
+with it and 0.07-0.10 s on the driver (4-vCPU host, warm session), and
+the 100-file backlog batch of perfbench's ``stream_load`` fell from 0.83
+to 0.38 s (medians of 10 runs). So the loader reads a local queue's
+batch with the threshold raised for that read (:func:`_driver_listing`).
+A queue on any other filesystem (``s3a://``, ``hdfs://``) keeps the
+session's threshold: the driver lists one path after another, and over
+an object store the Spark job's parallel listing can be the cheaper one.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
+import threading
 import uuid
 from datetime import datetime, timezone
 
@@ -45,6 +61,9 @@ from bricolage_spark.exception import ParameterError
 from bricolage_spark.jobs import Job, JobResult, jobclass
 
 _PATTERN_TOKEN = re.compile(r"[^%]+|%\d*.")
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_listing_lock = threading.Lock()
 
 _LOG_SCHEMA = StructType([
     StructField("job_process_id", StringType()),
@@ -113,10 +132,27 @@ def format_path(template: str, basename: str, pattern: re.Pattern) -> str:
     return re.sub(r"%.", sub, template)
 
 
+@contextlib.contextmanager
+def _driver_listing(spark):
+    """Within the block, the session lists any number of a read's root
+    paths on the driver, not in a Spark job (see the module docstring).
+    The threshold is a session conf, so the lock keeps concurrent loaders
+    in one session from restoring each other's raised value."""
+    with _listing_lock:
+        old = spark.conf.get(_LISTING_THRESHOLD)
+        spark.conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
+        try:
+            yield
+        finally:
+            spark.conf.set(_LISTING_THRESHOLD, old)
+
+
 class FileQueue:
     """The S3Queue stand-in: a directory of pending files
     (streaming_load.rb:392-527; any Hadoop URI at scale, local dir here).
     """
+
+    local = True  # its files are on the local filesystem
 
     def __init__(self, queue_path: str, persistent_path: str, file_name: str):
         self.queue_path = queue_path
@@ -160,6 +196,7 @@ class HadoopFileQueue:
         self._jpath = jvm.org.apache.hadoop.fs.Path
         hconf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
         self._fs = self._jpath(queue_path).getFileSystem(hconf)
+        self.local = self._fs.getScheme() == "file"
 
     def queued_files(self) -> list[str]:
         p = self._jpath(self.queue_path)
@@ -333,7 +370,8 @@ class StreamingLoader:
         """One micro-batch. Returns counters.
 
         Without a custom SQL the batch's files are parsed and written
-        once (one Spark job, at most one part file per core) and the
+        once (at most one part file per core; one Spark job for any
+        number of local files, whose listing runs on the driver) and the
         same Parquet files become the dest delta; one publish commits
         the work table, the dest and the log. A custom SQL reads the
         work table, which is therefore published before it runs."""
@@ -363,9 +401,10 @@ class StreamingLoader:
                 reader = reader.schema(schema_src)
             # DataFrameReader.parquet is varargs-only; csv/json accept a list
             # (their second positional is schema — never splat those)
-            df: DataFrame = (
-                reader.parquet(*new) if self.fmt == "parquet" else getattr(reader, self.fmt)(new)
-            )
+            with _driver_listing(spark) if self.queue.local else contextlib.nullcontext():
+                df: DataFrame = (
+                    reader.parquet(*new) if self.fmt == "parquet" else getattr(reader, self.fmt)(new)
+                )
 
             txid = uuid.uuid4().hex[:12]
             moves = []

@@ -140,6 +140,7 @@ def test_hadoop_queue_over_file_uri(spark, tmp_path):
         f"file://{tmp_path}/arch/%Y/%m/%d",
         "%Y%m%d_%H%M_%Q.json",
     )
+    assert q.local  # a file:// queue's batch is listed on the driver
     files = q.queued_files()
     assert len(files) == 1 and files[0].endswith("20240102_0000_00.json")
     dest = q.dequeue(files[0])
@@ -467,19 +468,21 @@ def test_dequeue_only_moves_just_the_logged_files(engine, tmp_path, queue_dir):
     assert (tmp_path / "archive" / "2024" / "01" / "01" / "20240101_0000_00.json").exists()
 
 
-def _warm_batch_jobs(spark, loader, queue_dir):
-    """Spark jobs of a warm batch of two files, after a cold one."""
+def _warm_batch_jobs(spark, loader, queue_dir, files=None):
+    """Spark jobs of a warm batch of two files (or of ``files``), after a
+    cold one."""
     from conftest import spark_jobs
 
     write_files(queue_dir, {"20240101_0000_00.json": ['{"x": 1, "y": "a"}']})
     loader.run_once()  # cold: creates dest, log and work table
-    write_files(queue_dir, {
+    files = files or {
         "20240101_0100_00.json": ['{"x": 2, "y": "b"}'],
         "20240101_0200_00.json": ['{"x": 3, "y": "c"}'],
-    })
+    }
+    write_files(queue_dir, files)
     stats = {}
     n = spark_jobs(spark, lambda: stats.update(loader.run_once()))
-    assert stats["loaded_files"] == 2 and stats["rows"] == 2
+    assert stats["loaded_files"] == len(files) and stats["rows"] == len(files)
     return n
 
 
@@ -494,6 +497,28 @@ def test_warm_batch_spark_job_budget(engine, spark, tmp_path, queue_dir):
     # the work table holds the batch, the dest every batch
     assert sorted((r.x, r.y) for r in engine.table("load_test_wk").collect()) == [(2, "b"), (3, "c")]
     assert engine.table("load_test").count() == 3
+
+
+@pytest.mark.parametrize("local, jobs", [(True, 1), (False, 2)], ids=["local", "remote"])
+def test_warm_backlog_batch_spark_job_budget(engine, spark, tmp_path, queue_dir, local, jobs):
+    """A backlog batch of 40 files, above Spark's default of 32 paths
+    over which it lists them in a Spark job of its own. From a local
+    queue it is still the one job: the loader lists its files on the
+    driver. A queue on another filesystem (stood in for by a local queue
+    that says it is not) keeps Spark's listing job. Either way the
+    session's threshold is left as it was."""
+    loader = make_loader(engine, queue_dir, tmp_path)
+    loader.queue.local = local
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(threshold)
+    files = {
+        f"20240101_0100_{i:02d}.json": [f'{{"x": {i + 2}, "y": "b"}}'] for i in range(40)
+    }
+    n = _warm_batch_jobs(spark, loader, queue_dir, files)
+    assert n == jobs, f"a warm 40-file batch ran {n} Spark jobs"
+    assert spark.conf.get(threshold) == before
+    assert sorted(r.x for r in engine.table("load_test_wk").collect()) == list(range(2, 42))
+    assert sorted(r.x for r in engine.table("load_test").collect()) == list(range(1, 42))
 
 
 def test_warm_batch_spark_job_budget_with_custom_sql(engine, spark, tmp_path, queue_dir):
